@@ -1,7 +1,7 @@
 package graft.index
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import scala.collection.mutable
@@ -48,10 +48,11 @@ case class DiskannParams(
  * page, meta_page.rs:179-210).
  *
  * Serving: each shard is searched independently (quantized traversal + exact
- * rescore) and per-shard top-k results are merged with a final window — the
- * classic partial/final top-k, which is Spark's native TakeOrdered shape.
- * Searching all shards and unioning is an over-approximation of single-graph
- * search, so recall is ≥ the per-shard recall.
+ * rescore) and per-shard top-k results are merged by one bounded top-k merge
+ * — the classic partial/final top-k. Every search entry point runs on the
+ * one search core below. Searching all shards and unioning is an
+ * over-approximation of single-graph search, so recall is ≥ the per-shard
+ * recall.
  */
 object DiskannIndex {
 
@@ -1289,19 +1290,135 @@ object DiskannIndex {
     df.as[IndexMeta].head()
   }
 
-  /** IVF probe routing for ONE query vector — the single routing rule
-    * shared by the online batch path and the resumable scan (a drifted copy
-    * would silently probe different shards warm vs cold). None = unrouted:
-    * the query searches every shard. */
+  // ---------------------------------------------------------------------
+  // The search core.
+  //
+  // Every public search entry point — search, searchPoint, servePointBatch,
+  // searchWithDelta, rangeSearch(WithStatus), openResumableScan,
+  // searchDistributed(Fresh), rangeSearchDistributed(Fresh) and the
+  // StreamingIngest fresh wrappers — is a thin parameterization of ONE
+  // pipeline, the analog of the reference answering every index scan
+  // through one ambeginscan -> amrescan -> amgettuple path (scan.rs:209-242):
+  //
+  //  1. [[View]]: the resolved generation, read once per call;
+  //  2. [[collectQueries]] / [[decodeQuery]]: one query decoder;
+  //  3. [[View.route]]: one routing rule per query shape, applied on the
+  //     driver and, over the broadcast view, on executors;
+  //  4. [[ShardScan]] / [[onShard]]: the one per-shard op — the only caller
+  //     of GraphSearcher.resumable and the only SearchMetrics sink, with
+  //     the tombstone mask applied there (scan.rs:229-235);
+  //  5. two ways to reach a shard: this JVM's warm searcher cache
+  //     ([[warmSearcher]]) or one memoized shard-aligned nodes RDD
+  //     ([[shardRdd]]);
+  //  6. [[scoreDelta]]: the one delta scorer, over a capped snapshot
+  //     ([[deltaSnapshot]]);
+  //  7. one merge per place it runs: [[mergeLocal]] on the driver,
+  //     [[mergeRdd]] on executors.
+  // ---------------------------------------------------------------------
+
+  /** A decoded query: (qid, qvec, normalized qlabels). A null qvec searches
+    * the zero vector (labels/mod.rs:214-216); null qlabels = unfiltered. */
+  private[graft] type Query = (Long, Array[Float], Array[Short])
+
+  /** One pending delta row: (row_id, vec, normalized labels — empty when
+    * the delta carries none). */
+  private[graft] type DeltaRow = (Long, Array[Float], Array[Short])
+
+  /** The query shape: the k nearest rows, or every row within a radius. */
+  private[graft] sealed trait Shape extends Serializable {
+    def nProbe: Int
+    /** the report-distance radius of a radius query */
+    def within: Option[Double]
+  }
+
+  private[graft] final case class TopK(k: Int, searchListSize: Int,
+      rescore: Int, nProbe: Int) extends Shape {
+    def within: Option[Double] = None
+  }
+
+  /** `maxResults` caps each (query, shard) escalation; `strict` fails an
+    * escalation the cap cut short instead of keeping its partial rows. */
+  private[graft] final case class Within(radius: Double, searchListSize: Int,
+      rescore: Int, maxResults: Int, strict: Boolean) extends Shape {
+    def nProbe: Int = 0
+    def within: Option[Double] = Some(radius)
+  }
+
+  /** Stage 1: one resolved generation — root, meta, metric, SBQ model,
+    * report distance and searcher cache keys. Resolved ONCE per call, so
+    * meta and nodes come from the same version even if a compaction swap
+    * lands mid-query. Serializable: executors route and decode over it. */
+  private[graft] final case class View(path0: String, root: String,
+      meta: IndexMeta) {
+    val metric: Metric = Metric(meta.metric)
+    val model: SbqModel =
+      if (meta.storage == "sbq")
+        SbqModel(meta.modelCount, meta.modelMean, meta.modelM2, meta.bitsPerDim)
+      else null
+    val report: (Array[Float], Array[Float]) => Double = reportDistFn(metric)
+    def allShards: Seq[Int] = 0 until meta.numShards
+
+    /** Searcher cache key: the CALLER's index path + the shard's build id.
+      * The generation dir changes on every compaction, but an untouched
+      * shard keeps its build id, so its decoded graph stays warm across
+      * incremental compactions. */
+    def key(shard: Int): String = s"$path0#$shard#${meta.shardBuildIds(shard)}"
+
+    /** The shard's searcher from this JVM's cache; `rows` (the whole shard)
+      * is read and decoded only on a miss. */
+    def searcher(shard: Int, rows: => Array[Row]): GraphSearcher =
+      GraphSearcher.getOrBuild(key(shard), () => buildShardSearcher(root,
+        shard, rows, metric, model, meta.hasLabels, meta.dimsToIndex))
+
+    /** Stage 3: the shards one query visits, None = every shard. nProbe
+      * narrows it to the nearest IVF shards ([[probeShardsFor]]); a radius
+      * also drops every shard whose cluster ball cannot reach the query
+      * ([[radiusShardsFor]] — sound, so it never changes a result). */
+    def route(qvec: Array[Float], nProbe: Int,
+        radius: Option[Double]): Option[Array[Int]] = {
+      val probed = probeShardsFor(meta, metric, qvec, nProbe)
+      radius.flatMap(r => radiusShardsFor(meta, metric, qvec, r)) match {
+        case Some(inBall) =>
+          val keep = inBall.toSet
+          Some(probed.getOrElse(allShards.toArray).filter(keep))
+        case None => probed
+      }
+    }
+
+    def route(qvec: Array[Float], shape: Shape): Option[Array[Int]] =
+      route(qvec, shape.nProbe, shape.within)
+
+    /** Whether [[route]] can narrow any query of `shape` at all. */
+    def routes(shape: Shape): Boolean =
+      probes(meta, shape.nProbe) ||
+        (shape.within.isDefined && radiusPrunes(meta, metric))
+  }
+
+  private[graft] def view(spark: SparkSession, path0: String): View = {
+    val root = resolveRoot(spark, path0)
+    View(path0, root, loadMetaAt(spark, root))
+  }
+
+  private def probes(meta: IndexMeta, nProbe: Int): Boolean =
+    meta.partitioner == "ivf" && nProbe > 0 && nProbe < meta.numShards &&
+      meta.centroids.nonEmpty
+
+  /** IVF probe routing for ONE query vector; None = unrouted, the query
+    * searches every shard. */
   private def probeShardsFor(meta: IndexMeta, metric: Metric,
       qvec: Array[Float], nProbe: Int): Option[Array[Int]] =
-    if (meta.partitioner == "ivf" && nProbe > 0 && nProbe < meta.numShards &&
-        meta.centroids.nonEmpty) {
+    if (probes(meta, nProbe)) {
       val raw =
         if (qvec == null) new Array[Float](meta.centroids(0).length) else qvec
       val bv = BuildSpace(raw, meta.dimsToIndex, metric)
       Some(graft.operators.Similarity.IvfModel(meta.centroids).nearest(bv, nProbe))
     } else None
+
+  private def radiusPrunes(meta: IndexMeta, metric: Metric): Boolean =
+    meta.partitioner == "ivf" && meta.centroids.nonEmpty &&
+      meta.shardRadii.length == meta.numShards &&
+      metric != Metric.InnerProduct &&
+      !(metric == Metric.Cosine && meta.dimsToIndex > 0)
 
   /**
    * SOUND shard pruning for RADIUS queries over IVF-partitioned indexes —
@@ -1315,15 +1432,12 @@ object DiskannIndex {
    * true L2 is Euclidean already, and a Matryoshka slice only SHRINKS L2
    * distances, so pruning with the full-vector radius stays a superset.
    * Returns None (no pruning) when radii are unknown (pre-round-10 metas,
-   * hash partitioner), for inner product (not a metric space), or for
-   * sliced cosine (the slice breaks the unit-norm identity).
+   * hash partitioner), for inner product (not a metric space), for sliced
+   * cosine (the slice breaks the unit-norm identity), or for a null query.
    */
   private[graft] def radiusShardsFor(meta: IndexMeta, metric: Metric,
       qvec: Array[Float], radius: Double): Option[Array[Int]] =
-    if (meta.partitioner == "ivf" && meta.centroids.nonEmpty &&
-        meta.shardRadii.length == meta.numShards && qvec != null &&
-        metric != Metric.InnerProduct &&
-        !(metric == Metric.Cosine && meta.dimsToIndex > 0)) {
+    if (radiusPrunes(meta, metric) && qvec != null) {
       val bv = BuildSpace(qvec, meta.dimsToIndex, metric)
       val eR = metric match {
         case Metric.Cosine => math.sqrt(2.0 * math.max(radius, 0.0))
@@ -1331,11 +1445,10 @@ object DiskannIndex {
       }
       Some((0 until meta.numShards).filter { s =>
         val dc = math.sqrt(VectorKernels.l2sq(bv, meta.centroids(s)))
-        // RELATIVE slack sized to the kernels' worst case: with the SIMD
-        // float-lane kernels enabled, l2sq at high dims carries ~1e-3
-        // relative error, and both the stored radius and dc round-trip
-        // through it — an absolute epsilon would under-admit boundary
-        // shards and break soundness. Over-admitting only costs time.
+        // RELATIVE slack: the stored radius and dc are both float-sourced
+        // sums whose rounding grows with magnitude and dimension, so an
+        // absolute epsilon would under-admit boundary shards and break
+        // soundness. Over-admitting only costs time.
         val slack = 1e-3 * (dc + meta.shardRadii(s)) + 1e-6
         dc - meta.shardRadii(s) <= eR + slack
       }.toArray)
@@ -1350,46 +1463,89 @@ object DiskannIndex {
       case Metric.InnerProduct => (a, b) => VectorKernels.negDot(a, b)
     }
 
-  /**
-   * ANN search: `queries` has columns (qid LONG, qvec ARRAY<FLOAT>) and
-   * optionally qlabels ARRAY<SHORT> (null = unfiltered). Returns
-   * (qid, row_id, dist) with per-query top-k rows, dist in SQL-visible form.
-   *
-   * The query set is collected and broadcast (it is the small side by
-   * definition); the index scan is a narrow mapPartitions over the nodes
-   * table — no shuffle of index data, only of k rows per (shard, query).
-   */
+  /** Stage 2: the query decoder. `queries` has columns (qid LONG,
+    * qvec ARRAY<FLOAT>) and optionally qlabels ARRAY<SHORT>. */
+  private def queryCols(queries: DataFrame): DataFrame =
+    queries.select(col("qid"), col("qvec"),
+      (if (queries.columns.contains("qlabels")) col("qlabels")
+       else lit(null).cast(ArrayType(ShortType))).as("qlabels"))
+
+  private def decodeQuery(r: Row): Query =
+    (r.getLong(0),
+      if (r.isNullAt(1)) null else r.getSeq[Float](1).toArray,
+      if (r.isNullAt(2)) null else LabelSets.normalize(r.getSeq[Short](2).toArray))
+
+  private[graft] def collectQueries(queries: DataFrame): Array[Query] =
+    queryCols(queries).collect().map(decodeQuery)
+
+  /** A caller-built query with its labels normalized. */
+  private[graft] def query(qid: Long, qvec: Array[Float],
+      qlabels: Array[Short]): Query =
+    (qid, qvec, Option(qlabels).map(LabelSets.normalize).orNull)
+
   /** Executor-side scan telemetry sinks (V5): Spark `SQLMetric`s are
-    * `AccumulatorV2`s, so adding to them inside `mapPartitions` surfaces the
-    * counts in the SQL UI / `metrics` of [[graft.plans.KnnIndexScanExec]]. */
+    * `AccumulatorV2`s, so adding to them inside a task surfaces the counts
+    * in the SQL UI / `metrics` of [[graft.plans.KnnIndexScanExec]]. */
   case class SearchMetrics(
       nodesVisited: org.apache.spark.sql.execution.metric.SQLMetric,
       quantizedCmps: org.apache.spark.sql.execution.metric.SQLMetric,
       exactCmps: org.apache.spark.sql.execution.metric.SQLMetric)
 
-  /**
-   * A scan of the nodes table whose every task sees only WHOLE shards.
-   * Parquet files are splittable (and Spark splits aggressively to fill
-   * parallelism — maxSplitBytes can drop to openCostInBytes), so a plain
-   * `spark.read.parquet(...).mapPartitions` can hand a task a shard SUBSET;
-   * node ids would no longer equal array positions after sort-and-compact and
-   * the adjacency would be corrupt. Two shapes, picked by shard count:
-   *
-   *  - moderate (≤ 256 shards): a union of per-shard partition-pruned scans,
-   *    each `coalesce(1)` — pruning keeps each branch to its own shard
-   *    directory and coalesce glues that shard's splits into ONE task with NO
-   *    shuffle. One union branch per shard is fine at this plan size.
-   *  - large (100 TB-scale, thousands of shards): one hash repartition on the
-   *    shard key — a single shuffle beats a many-thousand-branch union plan,
-   *    and co-locates each shard in exactly one task by construction.
-   */
-  private def wholeShardScan(nodes: DataFrame, shards: Seq[Int]): DataFrame =
-    if (shards.length <= 256)
-      shards.map(s => nodes.filter(col("shard") === s).coalesce(1))
-        .reduce(_ unionByName _)
-    else nodes
-      .filter(col("shard").isin(shards.map(Integer.valueOf): _*))
-      .repartition(shards.length, col("shard"))
+  /** Stage 4: THE per-shard op — one query's traversal of one shard,
+    * tombstones masked inside it. Every search runs through here: top-k and
+    * radius answers call [[advance]] once or per escalation round, the
+    * resumable scan keeps one per shard and extends it. The only caller of
+    * [[GraphSearcher.resumable]] and the only place that adds to
+    * [[SearchMetrics]] (each round reports only its new work). */
+  private[graft] final class ShardScan(searcher: GraphSearcher, q: Query,
+      report: (Array[Float], Array[Float]) => Double, tomb: Set[Long],
+      metrics: Option[SearchMetrics]) {
+    private val st = if (metrics.isDefined) new SearchStats else null
+    private val rs = searcher.resumable(q._2, q._3, rid => tomb.contains(rid),
+      report, st)
+
+    def n: Int = searcher.n
+
+    def advance(kk: Int, searchListSize: Int,
+        rescore: Int): Array[(Long, Double)] = {
+      val hits = rs.advance(kk, searchListSize, rescore)
+      metrics.foreach { m =>
+        m.nodesVisited.add(st.nodesVisited)
+        m.quantizedCmps.add(st.quantizedCmps)
+        m.exactCmps.add(st.exactCmps)
+        st.nodesVisited = 0L; st.quantizedCmps = 0L; st.exactCmps = 0L
+      }
+      hits
+    }
+  }
+
+  /** One query against one shard in `shape`: the top-k, or the shard-LOCAL
+    * escalate-until-stable radius set. Because a row lives in exactly one
+    * shard, per-shard radius exhaustiveness composes into the global one —
+    * which lets the distributed radius search run with no cross-shard
+    * coordination. An unconfirmed (cap-forced) radius answer fails loud
+    * under `strict`. */
+  private def onShard(v: View, s: GraphSearcher, shard: Int, q: Query,
+      shape: Shape, tomb: Set[Long],
+      metrics: Option[SearchMetrics]): Iterator[(Long, Long, Double)] = {
+    val scan = new ShardScan(s, q, v.report, tomb, metrics)
+    val hits: Seq[(Long, Double)] = shape match {
+      case t: TopK =>
+        scan.advance(t.k, t.searchListSize, t.rescore).take(t.k).toSeq
+      case w: Within =>
+        val (hits, confirmed) = escalateRadius(
+          (kk, l) => scan.advance(kk, math.max(l, kk), math.max(w.rescore, l)).toSeq,
+          w.radius, w.searchListSize, w.maxResults, scan.n)
+        if (!confirmed && w.strict)
+          throw new IllegalStateException(
+            s"rangeSearchDistributed: query ${q._1} shard $shard hit the " +
+              s"graft maxResults cap (${w.maxResults}) before its in-radius " +
+              "set stabilized — raise maxResults, or pass strict=false to " +
+              "keep possibly-partial rows")
+        hits
+    }
+    hits.iterator.map { case (rid, d) => (q._1, rid, d) }
+  }
 
   /** Decode one whole shard's rows into a serving [[GraphSearcher]] (CSR
     * adjacency + primitive arrays), failing fast on a partial shard —
@@ -1439,394 +1595,98 @@ object DiskannIndex {
     new GraphSearcher(rowIds, vecs, codes, lbs, off, tgt, metric, model, dimsToIndex)
   }
 
-  /** `nProbe` > 0 on an IVF-partitioned index restricts each query to its
-    * nProbe nearest shards (per-query cost O(nProbe) instead of
-    * O(numShards)); 0 = search every shard (exact same recall as hash). */
-  def search(spark: SparkSession, path0: String, queries: DataFrame, k: Int,
-      searchListSize: Int = 100, rescore: Int = 50,
-      tombstones: Set[Long] = Set.empty,
-      metrics: Option[SearchMetrics] = None,
-      nProbe: Int = 0): DataFrame = {
-    val hasQLabels = queries.columns.contains("qlabels")
-    val qRows: Array[(Long, Array[Float], Array[Short])] = queries.collect().map { r =>
-      // null query vector => zero-vector search (labels/mod.rs:214-216)
-      val qv = Option(r.getAs[mutable.Seq[Float]]("qvec")).map(_.toArray).orNull
-      val ql = if (hasQLabels) r.getAs[mutable.Seq[Short]]("qlabels") match {
-        case null => null
-        case s => LabelSets.normalize(s.toArray)
-      } else null
-      (r.getAs[Long]("qid"), qv, ql)
+  /** Stage 5a: a shard's searcher from THIS JVM's cache, with no scan — the
+    * analog of a reference backend serving from shared buffers. An EMPTY
+    * shard (a tombstone wipe rebuilt it to zero rows, or a degenerate split
+    * sub-cluster) is synthesized: no scan ever builds its searcher, so it
+    * would otherwise keep the whole index off the warm path forever.
+    * Emptiness comes from the META's exact per-shard row counts, never the
+    * filesystem — a GC racing this call can legitimately remove a
+    * superseded shard dir, and an FS probe would call that "empty" and
+    * silently truncate results. Unknown (pre-round-11) counts never
+    * synthesize. */
+  private def warmSearcher(v: View, shard: Int): Option[GraphSearcher] =
+    GraphSearcher.peek(v.key(shard)).orElse {
+      if (v.meta.shardRows.length == v.meta.numShards &&
+          v.meta.shardRows(shard) == 0L)
+        Some(v.searcher(shard, Array.empty))
+      else None
     }
-    searchRows(spark, path0, qRows, k, searchListSize, rescore, tombstones,
-      metrics, nProbe)
-  }
 
-  /**
-   * Low-latency POINT query — the reference's primary operation (one
-   * `ORDER BY embedding <=> q LIMIT k` per client call) as a driver API:
-   * returns the k (row_id, dist) pairs directly. When every probed shard's
-   * searcher is warm in this JVM, the entire call is driver-side — no
-   * Spark job, no DataFrame round-trip — which is what makes ms-scale
-   * serving possible from a long-lived session (ServingBench measures it;
-   * cold shards fall back to the scan path transparently).
-   */
-  def searchPoint(spark: SparkSession, path0: String, qvec: Array[Float],
-      k: Int, searchListSize: Int = 100, rescore: Int = 50, nProbe: Int = 0,
-      qlabels: Array[Short] = null,
-      tombstones: Set[Long] = Set.empty): Seq[(Long, Double)] = {
-    val ql = Option(qlabels).map(LabelSets.normalize).orNull
-    searchRows(spark, path0, Array((0L, qvec, ql)), k, searchListSize,
-      rescore, tombstones, None, nProbe)
-      .collect()
-      .map(r => (r.getLong(1), r.getDouble(2)))
-      .sortBy { case (rid, d) => (d, rid) }.toSeq
-  }
-
-  /** Memoized serving RDD per index path: one partition per shard over the
-    * current generation, reused across [[servePointBatch]] calls so steady
-    * serving pays ZERO per-call planning (the ~20 ms/branch QueryExecution
-    * cost of building the shard-aligned union — ZipPlanCost's measurement —
-    * is paid once per generation, not per query). Fingerprint = generation
-    * root + per-shard epochs + Spark application id, so a compaction or a
-    * session restart invalidates naturally. Bounded LRU like [[metaCache]]. */
-  private val servingRddCache = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[String, (String, org.apache.spark.rdd.RDD[Row])](
-      8, 0.75f, true) {
+  /** Memo for [[shardRdd]]: index STATE, never query results (every
+    * execution still scans the parquet nodes). Fingerprint = generation
+    * root + per-shard build ids + Spark application id, so a compaction,
+    * an in-place rebuild or a session restart invalidates naturally.
+    * Bounded LRU like [[metaCache]]. */
+  private val shardRddCache = java.util.Collections.synchronizedMap(
+    new java.util.LinkedHashMap[String, (String, RDD[Row])](8, 0.75f, true) {
       override def removeEldestEntry(
-          e: java.util.Map.Entry[String, (String, org.apache.spark.rdd.RDD[Row])]): Boolean =
+          e: java.util.Map.Entry[String, (String, RDD[Row])]): Boolean =
         size() > 16
     })
 
-  private def servingNodesRdd(spark: SparkSession, path0: String,
-      root: String, meta: IndexMeta): org.apache.spark.rdd.RDD[Row] = {
-    val fp = root + "#" + meta.shardBuildIds.mkString(",") + "#" +
+  /**
+   * Stage 5b: the shard-aligned nodes RDD over `shards` — partition i holds
+   * exactly the whole shards of bucket i — plus its buckets. Up to
+   * `graft.search.zipMaxShards` (default 4096) shards each bucket is one
+   * shard; past it buckets hold several whole shards, capping the number of
+   * plan branches. Building it costs one pruned-scan QueryExecution per
+   * bucket (~20 ms each), paid once per (generation, shard set, bucket
+   * size) instead of once per query. The lineage is shuffle-free: the index
+   * never crosses the wire, and a warm task never reads its (lazy) scan.
+   */
+  private def shardRdd(spark: SparkSession, v: View,
+      shards: Seq[Int]): (RDD[Row], IndexedSeq[Seq[Int]]) = {
+    val zipMaxShards = spark.conf.get("graft.search.zipMaxShards", "4096").toInt
+    val bucketSize =
+      math.max(1, math.ceil(shards.length.toDouble / zipMaxShards).toInt)
+    val buckets = shards.grouped(bucketSize).toIndexedSeq
+    val key = s"${v.path0}#${shards.mkString(",")}#$bucketSize"
+    val fp = v.root + "#" + v.meta.shardBuildIds.mkString(",") + "#" +
       spark.sparkContext.applicationId
-    val hit = servingRddCache.get(path0)
-    if (hit != null && hit._1 == fp) hit._2
+    val hit = shardRddCache.get(key)
+    if (hit != null && hit._1 == fp) (hit._2, buckets)
     else {
-      val all = 0 until meta.numShards
-      val rdd = shardAlignedNodesRdd(spark, nodesDf(spark, root, meta, all), all)
-      servingRddCache.put(path0, (fp, rdd))
-      rdd
+      val rdd = bucketedNodesRdd(spark, nodesDf(spark, v.root, v.meta, shards),
+        buckets)
+      // alignment rests on coalesce(1) yielding exactly ONE partition even
+      // for an EMPTY shard directory (unused IVF centroid) — true on Spark
+      // 4.x via CoalesceExec.EmptyRDDWithPartitions; fail with the
+      // invariant's name if an upgrade ever changes that
+      require(rdd.getNumPartitions == buckets.length,
+        s"nodes RDD has ${rdd.getNumPartitions} partitions, expected " +
+          s"${buckets.length} (one per shard bucket; empty-shard coalesce(1) " +
+          "must still yield one partition)")
+      shardRddCache.put(key, (fp, rdd))
+      (rdd, buckets)
     }
-  }
-
-  /** Memoized bucket-aligned zip scan for [[searchDistributed]] /
-    * [[rangeSearchDistributed]] (round 16): partition i holds exactly
-    * `buckets(i)`'s shards. Building it costs one pruned-scan
-    * QueryExecution PER BUCKET (~20 ms each — ZipPlanCost's measurement;
-    * ~0.5 s per query on the 500-shard fixture, and O(zipMaxShards)
-    * branches in general), all driver-side — paid once per (generation,
-    * routing set, bucket layout) instead of once per query. Fingerprint =
-    * generation root + per-shard epochs + applicationId + the exact shard
-    * set and bucket size, so compaction, an in-place rebuild, a different
-    * IVF routing set or a different zipMaxShards all invalidate naturally.
-    * The [[servingRddCache]] discipline — index STATE memoization, never
-    * query results (every execution still scans the parquet nodes). */
-  private val zipRddCache = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[String, (String, org.apache.spark.rdd.RDD[Row])](
-      8, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, (String, org.apache.spark.rdd.RDD[Row])]): Boolean =
-        size() > 16
-    })
-
-  private def zipNodesRdd(spark: SparkSession, path0: String, root: String,
-      meta: IndexMeta, neededShards: Seq[Int],
-      buckets: IndexedSeq[Seq[Int]],
-      bucketSize: Int): org.apache.spark.rdd.RDD[Row] = {
-    val fp = root + "#" + meta.shardBuildIds.mkString(",") + "#" +
-      spark.sparkContext.applicationId + "#" + neededShards.mkString(",") +
-      "#" + bucketSize
-    val key = s"$path0#zip#$bucketSize"
-    val hit = zipRddCache.get(key)
-    if (hit != null && hit._1 == fp) hit._2
-    else {
-      val nodes = nodesDf(spark, root, meta, neededShards)
-      val rdd =
-        if (bucketSize == 1) shardAlignedNodesRdd(spark, nodes, neededShards)
-        else bucketedNodesRdd(spark, nodes, buckets)
-      zipRddCache.put(key, (fp, rdd))
-      rdd
-    }
-  }
-
-  /**
-   * CLUSTER-MODE serving: answer a small query batch from EXECUTOR-resident
-   * warm searchers — the path that does not exist through [[searchPoint]]
-   * when the driver is not colocated with the executor cache (SCALING.md's
-   * documented cluster-mode fallback was the full scan path; this closes
-   * it). The reference serves from wherever the backend process holds its
-   * shared buffers; on Spark, that place is the executor JVM, so the
-   * serving pool lives there.
-   *
-   * How it stays cheap:
-   *  - ONE task per shard over a MEMOIZED shard-aligned RDD (partition i ==
-   *    shard i, the [[shardAlignedNodesRdd]] contract) — no per-call
-   *    planning, no shuffle anywhere in the lineage;
-   *  - each task checks the executor-local [[GraphSearcher]] cache FIRST
-   *    and serves without touching its input iterator when warm — the
-   *    parquet scan underneath is LAZY, so a warm task reads zero bytes
-   *    (asserted via task input metrics in DiskannIndexSpec). Only a cold
-   *    (first-visit) task consumes the scan and decodes the shard, after
-   *    which that executor holds the shard for the life of its LRU slot;
-   *  - IVF routing skips unprobed shards BEFORE the cache probe, so a
-   *    routed query batch schedules numShards no-op tasks but reads and
-   *    searches only its probe set;
-   *  - the per-query top-k merge runs driver-side over ≤ shards×k×|batch|
-   *    collected rows — the same bounded merge [[searchPoint]]'s all-warm
-   *    path does.
-   *
-   * Scheduling affinity is best-effort (Spark places tasks by scan
-   * locality, not by cache residency): a task landing on a cache-cold
-   * executor pays one scan+decode and warms THAT executor — at steady
-   * state each frequently-probed shard converges to one decoded replica
-   * per executor that serves it, bounded by the cache's LRU. Deletes are
-   * honored: the persisted tombstone registry is loaded (fingerprint-
-   * cached) and masked on every call, like the SQL scan path.
-   *
-   * Returns (qid, row_id, dist) rows, per query ordered by (dist, row_id),
-   * ties broken exactly like every other search path.
-   */
-  def servePointBatch(spark: SparkSession, path0: String,
-      queries: Seq[(Long, Array[Float], Array[Short])], k: Int,
-      searchListSize: Int = 100, rescore: Int = 50, nProbe: Int = 0,
-      tombstones: Set[Long] = Set.empty): Seq[(Long, Long, Double)] = {
-    if (queries.isEmpty) return Seq.empty
-    val path = resolveRoot(spark, path0)
-    val meta = loadMeta(spark, path)
-    val metric = Metric(meta.metric)
-    val model =
-      if (meta.storage == "sbq")
-        SbqModel(meta.modelCount, meta.modelMean, meta.modelM2, meta.bitsPerDim)
-      else null
-    val qRows = queries.map { case (qid, qv, ql) =>
-      (qid, qv, Option(ql).map(LabelSets.normalize).orNull)
-    }.toArray
-    val probeOf: Map[Long, Array[Int]] =
-      qRows.flatMap { case (qid, qv, _) =>
-        probeShardsFor(meta, metric, qv, nProbe).map(qid -> _)
-      }.toMap
-    val probedShards: Set[Int] =
-      if (probeOf.nonEmpty && probeOf.size == qRows.length)
-        probeOf.values.flatten.toSet
-      else (0 until meta.numShards).toSet
-    val tomb = tombstones ++ loadTombstones(spark, path0)
-    val report = reportDistFn(metric)
-    val rdd = servingNodesRdd(spark, path0, path, meta)
-    val sc = spark.sparkContext
-    val qBc = sc.broadcast(qRows)
-    val probeBc = sc.broadcast(probeOf)
-    val probedBc = sc.broadcast(probedShards)
-    val tombBc = sc.broadcast(tomb)
-    val shardIds = meta.shardBuildIds
-    val cachePath = path0
-    val hasLabels = meta.hasLabels
-    val dims = meta.dimsToIndex
-    val served = rdd.mapPartitionsWithIndex { (shard, it) =>
-      if (!probedBc.value.contains(shard)) Iterator.empty
-      else {
-        val key = s"$cachePath#$shard#${shardIds(shard)}"
-        // peek BEFORE touching the iterator: a warm hit must not consume
-        // (= read) the underlying lazy parquet scan at all
-        val searcher = GraphSearcher.peek(key).getOrElse {
-          val rows = it.toArray
-          if (rows.isEmpty) null
-          else GraphSearcher.getOrBuild(key,
-            () => buildShardSearcher(path, shard, rows, metric, model,
-              hasLabels, dims))
-        }
-        if (searcher == null) Iterator.empty
-        else qBc.value.iterator
-          .filter { case (qid, _, _) =>
-            probeBc.value.get(qid).forall(_.contains(shard)) }
-          .flatMap { case (qid, qv, ql) =>
-            searcher.search(qv, k, searchListSize, rescore, ql,
-              rid => tombBc.value.contains(rid), report, null)
-              .take(k).map { case (rid, d) => (qid, rid, d) }
-          }
-      }
-    }
-    // submit ONLY the probed partitions (partition id == shard id by the
-    // aligned-RDD contract): a routed single query schedules nProbe tasks,
-    // not numShards — the scheduling overhead that otherwise dominates
-    // point latency at high shard counts
-    val partial = sc.runJob(served,
-      (it: Iterator[(Long, Long, Double)]) => it.toArray,
-      probedShards.toSeq.sorted).flatten
-    partial.groupBy(_._1).iterator.flatMap { case (_, hits) =>
-      hits.sortBy(h => (h._3, h._2)).take(k)
-    }.toSeq.sortBy(h => (h._1, h._3, h._2))
-  }
-
-  /** [[search]] after query collection — the shared kernel for the
-    * DataFrame path and [[searchPoint]]. */
-  private[graft] def searchRows(spark: SparkSession, path0: String,
-      qRows: Array[(Long, Array[Float], Array[Short])], k: Int,
-      searchListSize: Int, rescore: Int, tombstones: Set[Long],
-      metrics: Option[SearchMetrics], nProbe: Int): DataFrame = {
-    // resolve the active generation ONCE: meta and nodes must come from the
-    // same version even if a compaction swap lands mid-query
-    val path = resolveRoot(spark, path0)
-    val meta = loadMeta(spark, path)
-    val metric = Metric(meta.metric)
-    val model =
-      if (meta.storage == "sbq") SbqModel(meta.modelCount, meta.modelMean, meta.modelM2, meta.bitsPerDim)
-      else null
-    // IVF routing: per-query probe set computed once on the driver from the
-    // meta centroids (tiny); absent = query searches every shard
-    val probeOf: Map[Long, Array[Int]] =
-      qRows.flatMap { case (qid, qv, _) =>
-        probeShardsFor(meta, metric, qv, nProbe).map(qid -> _)
-      }.toMap
-    val probeBc = spark.sparkContext.broadcast(probeOf)
-    val qBc = spark.sparkContext.broadcast(qRows)
-    val tombBc = spark.sparkContext.broadcast(tombstones)
-    val report = reportDistFn(metric)
-
-    // IVF routing also prunes the SCAN: only shards some query probes are
-    // read at all (partition-pruned by the shard directory key) — at
-    // thousands of shards a probe touches O(queries × nProbe) shards, not
-    // every shard. Unrouted searches read everything.
-    val neededShards: Seq[Int] =
-      if (probeOf.nonEmpty && probeOf.size == qRows.length)
-        probeOf.values.flatten.toSet.toSeq.sorted
-      else 0 until meta.numShards
-    val resultSchema = StructType(Seq(
-      StructField("qid", LongType, nullable = false),
-      StructField("row_id", LongType, nullable = false),
-      StructField("dist", DoubleType, nullable = false)))
-
-    // cache keys use the CALLER's index path + the per-shard epoch: the
-    // resolved generation dir changes on every compaction, but an untouched
-    // shard keeps its epoch, so its decoded graph stays warm across
-    // incremental compactions
-    val shardIds = meta.shardBuildIds
-    val cachePath = path0
-
-    def searchShard(searcher: GraphSearcher, shard: Int,
-        qs: Iterator[(Long, Array[Float], Array[Short])],
-        tomb: Set[Long], probes: Map[Long, Array[Int]]): Iterator[Row] =
-      qs.filter { case (qid, _, _) => probes.get(qid).forall(_.contains(shard)) }
-        .flatMap { case (qid, qvec, qlabels) =>
-          val st = if (metrics.isDefined) new SearchStats else null
-          val hits = searcher.search(qvec, k, searchListSize, rescore, qlabels,
-            rid => tomb.contains(rid), report, st)
-          metrics.foreach { m =>
-            m.nodesVisited.add(st.nodesVisited)
-            m.quantizedCmps.add(st.quantizedCmps)
-            m.exactCmps.add(st.exactCmps)
-          }
-          hits.take(k).map { case (rid, d) => Row(qid, rid, d) }
-        }
-
-    // Serving warm path: a shard whose decoded searcher already lives in
-    // THIS JVM's cache is answered directly, with no nodes scan at all — the
-    // analog of a reference backend serving from shared buffers instead of
-    // re-reading index pages. In local mode (and any serving node colocated
-    // with its executor cache) repeat point queries skip Parquet entirely; in
-    // cluster mode the query-issuing driver has an empty cache, every shard
-    // is cold, and the scan path below is unchanged. Gated to small query
-    // batches — large batches belong to searchDistributed anyway.
-    val warmPairs: Seq[(Int, GraphSearcher)] =
-      if (qRows.length <= 128)
-        neededShards.flatMap(sh =>
-          GraphSearcher.peek(s"$cachePath#$sh#${shardIds(sh)}").map(sh -> _))
-      else Seq.empty
-    val warmSet = warmPairs.map(_._1).toSet
-    val coldShards = neededShards.filterNot(warmSet)
-    val warmShards = warmPairs.map(_._1)
-    val warmRows: Seq[Row] = warmPairs.flatMap { case (shard, searcher) =>
-      searchShard(searcher, shard, qRows.iterator, tombstones, probeOf).toSeq
-    }
-
-    val coldPartial: Option[DataFrame] = if (coldShards.isEmpty) None else {
-      val coldNodes =
-        wholeShardScan(nodesDf(spark, path, meta, coldShards), coldShards)
-      Some(coldNodes.mapPartitions { it =>
-        val rows = it.toArray
-        if (rows.isEmpty) Iterator.empty
-        else rows.groupBy(_.getAs[Int]("shard")).iterator.flatMap { case (shard, shardRows) =>
-          val searcher = GraphSearcher.getOrBuild(
-            s"$cachePath#$shard#${shardIds(shard)}",
-            () => buildShardSearcher(path, shard, shardRows, metric, model,
-              meta.hasLabels, meta.dimsToIndex))
-          searchShard(searcher, shard, qBc.value.iterator, tombBc.value, probeBc.value)
-        }
-      }(org.apache.spark.sql.Encoders.row(resultSchema)))
-    }
-
-    // All-warm serving fast path: every probed shard answered from this
-    // JVM's decoded searchers, so the per-query top-k merge is over ≤
-    // nShards×k DRIVER-LOCAL rows — do it here and return a LocalRelation.
-    // Routing it through the window merge below would spend a full Spark
-    // job + shuffle on rows already in hand (measured: single-query p50
-    // ~190 ms through the window vs low-ms driver-side; the reference
-    // analog is answering from shared buffers without planning a scan).
-    // Same ordering rule as the window ((dist, row_id) ascending), so the
-    // result content is bit-identical.
-    if (coldShards.isEmpty) {
-      val topk = warmRows.groupBy(_.getLong(0)).iterator.flatMap {
-        case (_, rs) => rs.sortBy(r => (r.getDouble(2), r.getLong(1))).take(k)
-      }.toSeq
-      return spark.createDataFrame(
-        java.util.Arrays.asList(topk: _*), resultSchema)
-    }
-
-    val warmPartial: Option[DataFrame] =
-      if (warmShards.isEmpty) None
-      else Some(spark.createDataFrame(
-        java.util.Arrays.asList(warmRows: _*), resultSchema))
-
-    val partial = (warmPartial, coldPartial) match {
-      case (Some(w), Some(c)) => w.unionByName(c)
-      case (Some(w), None) => w
-      case (None, Some(c)) => c
-      case (None, None) =>
-        spark.createDataFrame(java.util.Collections.emptyList[Row](), resultSchema)
-    }
-
-    // final top-k merge per query
-    partial
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy(col("qid")).orderBy(col("dist"), col("row_id"))))
-      .filter(col("rnk") <= k)
-      .drop("rnk")
   }
 
   /**
    * Shard-aligned, SHUFFLE-FREE nodes RDD: partition i holds exactly shard
-   * `neededShards(i)`, built as an RDD-level union of per-shard
-   * partition-pruned scans. RDD union (unlike a Catalyst union) never
-   * repacks tiny scans into fewer partitions — the zip alignment depends on
-   * that — and its lineage contains NO ShuffleDependency on the nodes side
-   * (asserted by DiskannIndexSpec), which is the property that keeps the
-   * 100 TB index out of every shuffle regardless of shard count.
+   * `neededShards(i)` — [[bucketedNodesRdd]] with one shard per bucket.
    */
   private[graft] def shardAlignedNodesRdd(spark: SparkSession,
-      nodes: DataFrame,
-      neededShards: Seq[Int]): org.apache.spark.rdd.RDD[Row] = {
-    // each branch pays its own QueryExecution (~20 ms measured — the only
-    // cost that grows with shard count on this path); branches are
-    // independent, so plan them on a parallel collection (Spark planning is
-    // thread-safe per session — concurrent queries do exactly this).
-    // ParSeq.map preserves sequence order, which the zip alignment needs.
-    // ZipPlanCost is the measurement harness.
-    import scala.collection.parallel.CollectionConverters._
-    spark.sparkContext.union(
-      neededShards.par
-        .map(s => nodes.filter(col("shard") === s).coalesce(1).rdd).seq)
-  }
+      nodes: DataFrame, neededShards: Seq[Int]): RDD[Row] =
+    bucketedNodesRdd(spark, nodes, neededShards.map(Seq(_)))
 
   /**
-   * Bucket-aligned generalization of [[shardAlignedNodesRdd]]: partition i
-   * holds ALL rows of the shards in `buckets(i)` via one partition-pruned
-   * coalesced scan per bucket. Same shuffle-free lineage property (asserted
-   * by DiskannIndexSpec past `zipMaxShards`) — this is what lets the zip
-   * path serve ANY shard count with a bounded number of plan branches.
+   * Bucket-aligned nodes RDD: partition i holds ALL rows of the shards in
+   * `buckets(i)`, built as an RDD-level union of one partition-pruned
+   * `coalesce(1)` scan per bucket. Parquet files are splittable, so a plain
+   * scan can hand a task a shard SUBSET (node ids would no longer equal
+   * array positions and the adjacency would be corrupt); coalesce glues a
+   * bucket's splits into ONE task with no shuffle. RDD union (unlike a
+   * Catalyst union) never repacks tiny scans into fewer partitions — the
+   * alignment depends on that — and its lineage contains NO
+   * ShuffleDependency (asserted by DiskannIndexSpec), which keeps the
+   * 100 TB index out of every shuffle regardless of shard count. Each
+   * branch pays its own QueryExecution; branches are independent, so they
+   * are planned on a parallel collection (Spark planning is thread-safe per
+   * session), whose map preserves order.
    */
   private[graft] def bucketedNodesRdd(spark: SparkSession, nodes: DataFrame,
-      buckets: Seq[Seq[Int]]): org.apache.spark.rdd.RDD[Row] = {
+      buckets: Seq[Seq[Int]]): RDD[Row] = {
     import scala.collection.parallel.CollectionConverters._
     spark.sparkContext.union(
       buckets.par.map(ss => nodes
@@ -1835,14 +1695,336 @@ object DiskannIndex {
   }
 
   /** True iff `rdd`'s lineage reaches a shuffle — test/plan-audit hook. */
-  private[graft] def hasShuffle(rdd: org.apache.spark.rdd.RDD[_]): Boolean = {
+  private[graft] def hasShuffle(rdd: RDD[_]): Boolean = {
     val seen = mutable.Set.empty[Int]
-    def walk(r: org.apache.spark.rdd.RDD[_]): Boolean =
+    def walk(r: RDD[_]): Boolean =
       seen.add(r.id) && r.dependencies.exists {
         case _: org.apache.spark.ShuffleDependency[_, _, _] => true
         case d => walk(d.rdd)
       }
     walk(rdd)
+  }
+
+  /** Answer one partition of a [[shardRdd]]: `work` pairs each of the
+    * bucket's shards with the queries routed to it. A searcher comes from
+    * the executor cache; only a miss consumes `nodes` (the scan is lazy, so
+    * a warm task reads zero bytes) and decodes the shard, after which that
+    * executor holds it for the life of its LRU slot. */
+  private def answerPartition(v: View, bucket: Seq[Int], nodes: Iterator[Row],
+      work: Seq[(Int, Seq[Query])], shape: Shape, tomb: Set[Long],
+      metrics: Option[SearchMetrics]): Iterator[(Long, Long, Double)] = {
+    lazy val byShard: Map[Int, Array[Row]] = {
+      val rows = nodes.toArray
+      // alignment is by construction; fail fast if it ever breaks (an EMPTY
+      // shard — unused IVF centroid — is legal and builds an empty searcher)
+      require(rows.isEmpty || bucket.contains(rows(0).getAs[Int]("shard")),
+        s"nodes partition misaligned with its shard bucket ${bucket.mkString(",")}")
+      rows.groupBy(_.getAs[Int]("shard"))
+    }
+    work.iterator.flatMap { case (shard, qs) =>
+      val s = v.searcher(shard, byShard.getOrElse(shard, Array.empty))
+      qs.iterator.flatMap(onShard(v, s, shard, _, shape, tomb, metrics))
+    }
+  }
+
+  private def routedTo(routed: Array[(Query, Option[Array[Int]])],
+      shard: Int): Seq[Query] =
+    routed.iterator.collect {
+      case (q, r) if r.forall(_.contains(shard)) => q
+    }.toSeq
+
+  /** Stage 6a: the capped delta snapshot every fresh path scores. At most
+    * `graft.delta.maxBroadcastRows` rows reach the driver — enforced, not
+    * advisory: one extra row proves oversize, and the error names the real
+    * fix (folding the delta). NULL vectors are never indexed
+    * (build.rs:493-498), so they are dropped; foreachBatch ingest is
+    * at-least-once, so a replayed micro-batch's copies collapse by row_id
+    * (without that, both copies could take two top-k slots). */
+  private[graft] def deltaSnapshot(spark: SparkSession,
+      delta: DataFrame): Array[DeltaRow] = {
+    val cap = spark.conf.get("graft.delta.maxBroadcastRows", "2000000").toInt
+    val rows = delta.select(col("row_id").cast(LongType), col("vec"),
+        (if (delta.columns.contains("labels")) col("labels")
+         else lit(null).cast(ArrayType(ShortType))).as("labels"))
+      .filter(col("vec").isNotNull)
+      .limit(cap + 1).collect()
+    require(rows.length <= cap,
+      s"pending delta exceeds graft.delta.maxBroadcastRows ($cap) — the " +
+        "fresh search paths snapshot the delta, which the compaction " +
+        "contract keeps small; fold it with StreamingIngest.compactNow (or " +
+        "enable autoCompact), or raise the knob if the driver can hold it")
+    rows.map { r =>
+      (r.getLong(0), r.getSeq[Float](1).toArray,
+        LabelSets.normalize(
+          if (r.isNullAt(2)) null else r.getSeq[Short](2).toArray))
+    }.sortBy(_._1).distinctBy(_._1)
+  }
+
+  /** Stage 6b: THE delta scorer — one query against a delta snapshot by
+    * exact brute force: tombstones masked, label rules of the graph
+    * traversal (a labeled query matches only a delta row sharing a label,
+    * labels/mod.rs:188-204), and a bounded top-k heap or the radius match
+    * set. Output rows are (qid, row_id, dist). */
+  private[graft] def scoreDelta(report: (Array[Float], Array[Float]) => Double,
+      delta: Array[DeltaRow], q: Query, shape: Shape,
+      tomb: Set[Long]): Iterator[(Long, Long, Double)] = {
+    val (qid, qv, ql) = q
+    val scored = delta.iterator
+      .filter { case (rid, _, lbs) =>
+        !tomb.contains(rid) && (ql == null || LabelSets.overlaps(lbs, ql)) }
+      .map { case (rid, v, _) =>
+        (report(v, if (qv == null) new Array[Float](v.length) else qv), rid) }
+    val kept: Iterator[(Double, Long)] = shape match {
+      case w: Within => scored.filter(_._1 <= w.radius)
+      case t: TopK =>
+        val ord = Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Long)
+        val heap = mutable.PriorityQueue.empty[(Double, Long)](ord)
+        scored.foreach { h =>
+          if (heap.size < t.k) heap.enqueue(h)
+          else if (ord.lt(h, heap.head)) { heap.dequeue(); heap.enqueue(h) }
+        }
+        heap.iterator
+    }
+    kept.map { case (d, rid) => (qid, rid, d) }
+  }
+
+  /** Stage 7 on the driver: collapse duplicate (qid, row_id) hits to their
+    * minimum distance — a row can transiently exist in BOTH the main graph
+    * and the delta (compaction folded it, its delta file not yet deleted) —
+    * then keep each query's top `k` by (dist, row_id). Ordered by
+    * (qid, dist, row_id). */
+  private[graft] def mergeLocal(hits: Iterable[(Long, Long, Double)],
+      k: Int): Seq[(Long, Long, Double)] =
+    hits.groupBy(_._1).toSeq.sortBy(_._1).flatMap { case (_, hs) =>
+      hs.groupMapReduce(_._2)(identity)((a, b) => if (b._3 < a._3) b else a)
+        .values.toSeq.sortBy(h => (h._3, h._2)).take(k)
+    }
+
+  /** Stage 7 on executors: the same rule as [[mergeLocal]]. Top-k runs as
+    * ONE mergeable bounded aggregation — map-side combine caps each task's
+    * contribution at k rows per query before the shuffle, and the
+    * distinct-id [[graft.operators.Similarity.TopKAggregator]] collapses
+    * duplicates on the way — as an RDD `aggregateByKey`, which plans
+    * nothing (the typed `groupByKey().agg()` form re-paid two Catalyst
+    * QueryExecutions per query). A radius set has no k: only the collapse. */
+  private def mergeRdd(hits: RDD[(Long, Long, Double)],
+      shape: Shape): RDD[(Long, Long, Double)] = shape match {
+    case t: TopK =>
+      val agg = new graft.operators.Similarity.TopKAggregator(t.k,
+        distinctIds = true)
+      hits.map { case (qid, rid, d) => (qid, (rid, d)) }
+        .aggregateByKey(agg.zero)(
+          (st, v) => agg.reduce(st, v), (a, b) => agg.merge(a, b))
+        .flatMap { case (qid, st) =>
+          st.ids.indices.iterator.map(i => (qid, st.ids(i), st.dists(i))) }
+    case _: Within =>
+      hits.map { case (qid, rid, d) => ((qid, rid), d) }
+        .reduceByKey((a, b) => math.min(a, b))
+        .map { case ((qid, rid), d) => (qid, rid, d) }
+  }
+
+  private val resultSchema = StructType(Seq(
+    StructField("qid", LongType, nullable = false),
+    StructField("row_id", LongType, nullable = false),
+    StructField("dist", DoubleType, nullable = false)))
+
+  /** Driver-local hits as a (qid, row_id, dist) LocalRelation. */
+  private[graft] def hitsDf(spark: SparkSession,
+      hits: Seq[(Long, Long, Double)]): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(
+      hits.map { case (q, r, d) => Row(q, r, d) }: _*), resultSchema)
+
+  /**
+   * The driver-collected search: a small query batch already on the driver.
+   * Shards whose searcher is warm in THIS JVM are answered right here, with
+   * no Spark job (gated to ≤128 queries — larger batches belong to
+   * [[searchDistributed]]; off for the executor-resident pool); the rest
+   * take ONE job over the memoized shard RDD that submits only their
+   * partitions. The delta snapshot is scored driver-side and everything
+   * merges driver-side over ≤ shards×k×|batch| rows. Returns
+   * (qid, row_id, dist) ordered by (qid, dist, row_id).
+   */
+  private[graft] def searchCollected(spark: SparkSession, path0: String,
+      queries: Seq[Query], shape: TopK, tombstones: Set[Long],
+      metrics: Option[SearchMetrics], delta: Array[DeltaRow],
+      driverWarm: Boolean): Seq[(Long, Long, Double)] = {
+    if (queries.isEmpty) return Seq.empty
+    val v = view(spark, path0)
+    val routed = queries.map(q => (q, v.route(q._2, shape))).toArray
+    // routing also prunes the SCAN: only shards some query visits are read
+    val needed: Seq[Int] =
+      if (routed.forall(_._2.isDefined)) routed.flatMap(_._2.get).distinct.sorted.toSeq
+      else v.allShards
+    val warm =
+      if (driverWarm && queries.length <= 128)
+        needed.flatMap(s => warmSearcher(v, s).map(s -> _))
+      else Seq.empty
+    val hits = mutable.ArrayBuffer.empty[(Long, Long, Double)]
+    warm.foreach { case (shard, s) =>
+      routedTo(routed, shard).foreach(q =>
+        hits ++= onShard(v, s, shard, q, shape, tombstones, metrics))
+    }
+    val cold = needed.filterNot(warm.map(_._1).toSet)
+    if (cold.nonEmpty) {
+      // the pool serves from one memoized all-shard RDD (no per-call
+      // planning at any probe set); a driver-side miss plans only its
+      // cold shards, which then stay warm here
+      val (nodes, buckets) =
+        shardRdd(spark, v, if (driverWarm) cold else v.allShards)
+      val coldSet = cold.toSet
+      val bc = spark.sparkContext.broadcast((v, routed, tombstones))
+      val served = nodes.mapPartitionsWithIndex { (b, it) =>
+        val (v, routed, tomb) = bc.value
+        val work = buckets(b).filter(coldSet)
+          .map(s => s -> routedTo(routed, s)).filter(_._2.nonEmpty)
+        answerPartition(v, buckets(b), it, work, shape, tomb, metrics)
+      }
+      spark.sparkContext.runJob(served,
+          (it: Iterator[(Long, Long, Double)]) => it.toArray,
+          buckets.indices.filter(b => buckets(b).exists(coldSet)))
+        .foreach(hits ++= _)
+    }
+    queries.foreach(q => hits ++= scoreDelta(v.report, delta, q, shape, tombstones))
+    mergeLocal(hits, shape.k)
+  }
+
+  /**
+   * The distributed search, for query TABLES too large to collect: nothing
+   * touches the driver but the view. Queries are decoded and routed
+   * executor-side over the broadcast view, fanned to their shards, and
+   * hash-partitioned to the partition index of the memoized bucketed nodes
+   * RDD — the zip co-locates each shard with its queries while moving ONLY
+   * query rows. The delta snapshot is broadcast and scored map-side per
+   * query partition. Top-k merges through [[mergeRdd]]; a radius set only
+   * collapses main∩delta duplicates (a row lives in exactly one shard).
+   */
+  private[graft] def searchTable(spark: SparkSession, path0: String,
+      queries: DataFrame, shape: Shape, tombstones: Set[Long],
+      delta: Array[DeltaRow]): DataFrame = {
+    val v = view(spark, path0)
+    val sc = spark.sparkContext
+    val bc = sc.broadcast((v, tombstones, delta))
+    val qs = queryCols(queries).rdd.map(decodeQuery)
+    val fanned = qs.flatMap { q =>
+      val v = bc.value._1
+      v.route(q._2, shape).map(_.toSeq).getOrElse(v.allShards).map(_ -> q)
+    }
+    // only shards some query is routed to are read at all (numShards ints
+    // at most reach the driver)
+    val needed: Seq[Int] =
+      if (v.routes(shape)) fanned.keys.distinct().collect().sorted.toSeq
+      else v.allShards
+    val main: RDD[(Long, Long, Double)] =
+      if (needed.isEmpty) sc.emptyRDD
+      else {
+        val (nodes, buckets) = shardRdd(spark, v, needed)
+        val bucketOf = buckets.zipWithIndex
+          .flatMap { case (ss, b) => ss.map(_ -> b) }.toMap
+        val byBucket = new org.apache.spark.Partitioner {
+          override def numPartitions: Int = buckets.length
+          override def getPartition(key: Any): Int = bucketOf(key.asInstanceOf[Int])
+        }
+        nodes.zipPartitions(fanned.partitionBy(byBucket)) { (nodeIt, qIt) =>
+          val (v, tomb, _) = bc.value
+          val work = qIt.toArray.groupBy(_._1).toSeq
+            .map { case (s, sq) => s -> sq.map(_._2).toSeq }
+          answerPartition(v, buckets(org.apache.spark.TaskContext.getPartitionId()),
+            nodeIt, work, shape, tomb, None)
+        }
+      }
+    val hits =
+      if (delta.isEmpty) main
+      else main.union(qs.mapPartitions { it =>
+        val (v, tomb, d) = bc.value
+        it.flatMap(scoreDelta(v.report, d, _, shape, tomb))
+      })
+    val merged = shape match {
+      case _: Within if delta.isEmpty => hits
+      case _ => mergeRdd(hits, shape)
+    }
+    spark.createDataFrame(merged.map { case (q, r, d) => Row(q, r, d) },
+      resultSchema)
+  }
+
+  /**
+   * ANN search: `queries` has columns (qid LONG, qvec ARRAY<FLOAT>) and
+   * optionally qlabels ARRAY<SHORT> (null = unfiltered). Returns
+   * (qid, row_id, dist) with per-query top-k rows, dist in SQL-visible form.
+   * The query set is collected (it is the small side by definition) and
+   * answered by [[searchCollected]]; the result is a LocalRelation.
+   * `nProbe` > 0 on an IVF-partitioned index restricts each query to its
+   * nProbe nearest shards (per-query cost O(nProbe) instead of
+   * O(numShards)); 0 = search every shard (exact same recall as hash).
+   */
+  def search(spark: SparkSession, path0: String, queries: DataFrame, k: Int,
+      searchListSize: Int = 100, rescore: Int = 50,
+      tombstones: Set[Long] = Set.empty,
+      metrics: Option[SearchMetrics] = None,
+      nProbe: Int = 0): DataFrame =
+    hitsDf(spark, searchCollected(spark, path0, collectQueries(queries),
+      TopK(k, searchListSize, rescore, nProbe), tombstones, metrics,
+      Array.empty, driverWarm = true))
+
+  /**
+   * Low-latency POINT query — the reference's primary operation (one
+   * `ORDER BY embedding <=> q LIMIT k` per client call) as a driver API:
+   * returns the k (row_id, dist) pairs ordered by (dist, row_id). When every
+   * probed shard's searcher is warm in this JVM, the entire call is
+   * driver-side — no Spark job, no DataFrame — which is what makes ms-scale
+   * serving possible from a long-lived session; cold shards fall back to
+   * one scan job transparently.
+   */
+  def searchPoint(spark: SparkSession, path0: String, qvec: Array[Float],
+      k: Int, searchListSize: Int = 100, rescore: Int = 50, nProbe: Int = 0,
+      qlabels: Array[Short] = null,
+      tombstones: Set[Long] = Set.empty): Seq[(Long, Double)] =
+    searchCollected(spark, path0, Seq(query(0L, qvec, qlabels)),
+      TopK(k, searchListSize, rescore, nProbe), tombstones, None,
+      Array.empty, driverWarm = true).map(h => (h._2, h._3))
+
+  /**
+   * CLUSTER-MODE serving: answer a small query batch from EXECUTOR-resident
+   * warm searchers — the path that does not exist through [[searchPoint]]
+   * when the driver is not colocated with the executor cache. The reference
+   * serves from wherever the backend process holds its shared buffers; on
+   * Spark, that place is the executor JVM, so the serving pool lives there.
+   *
+   * One task per probed shard over the memoized all-shard RDD (no per-call
+   * planning, no shuffle); each task checks the executor-local searcher
+   * cache FIRST and serves without reading its scan when warm (asserted via
+   * task input metrics in DiskannIndexSpec). Scheduling affinity is
+   * best-effort (Spark places tasks by scan locality, not cache residency):
+   * a task on a cache-cold executor pays one scan+decode and warms THAT
+   * executor. Deletes are honored: the persisted tombstone registry is
+   * loaded (fingerprint-cached) and masked on every call.
+   *
+   * Returns (qid, row_id, dist) rows ordered by (qid, dist, row_id).
+   */
+  def servePointBatch(spark: SparkSession, path0: String,
+      queries: Seq[(Long, Array[Float], Array[Short])], k: Int,
+      searchListSize: Int = 100, rescore: Int = 50, nProbe: Int = 0,
+      tombstones: Set[Long] = Set.empty): Seq[(Long, Long, Double)] =
+    searchCollected(spark, path0,
+      queries.map { case (qid, qv, ql) => query(qid, qv, ql) },
+      TopK(k, searchListSize, rescore, nProbe),
+      tombstones ++ loadTombstones(spark, path0), None, Array.empty,
+      driverWarm = false)
+
+  /**
+   * Search main index + an unindexed delta (micro-batch appends, §3.3 / G9):
+   * the delta side is answered by exact brute force and merged into the
+   * final top-k. `delta` has columns (row_id, vec [, labels]). The delta is
+   * snapshotted BEFORE the generation resolves (see
+   * [[graft.streaming.StreamingIngest.searchFresh]]).
+   */
+  def searchWithDelta(spark: SparkSession, path: String, queries: DataFrame,
+      delta: DataFrame, k: Int, searchListSize: Int = 100, rescore: Int = 50,
+      tombstones: Set[Long] = Set.empty,
+      metrics: Option[SearchMetrics] = None, nProbe: Int = 0): DataFrame = {
+    val snap = deltaSnapshot(spark, delta)
+    hitsDf(spark, searchCollected(spark, path, collectQueries(queries),
+      TopK(k, searchListSize, rescore, nProbe), tombstones, metrics, snap,
+      driverWarm = true))
   }
 
   /**
@@ -1851,37 +2033,41 @@ object DiskannIndex {
    * the residual-recheck over-fetch loop: each escalation round EXTENDS the
    * per-shard best-first frontiers instead of re-searching from scratch.
    *
-   * Opens only when every needed shard's decoded [[GraphSearcher]] is
-   * already in THIS JVM's cache (the serving warm path: always true in
-   * local mode after the first round, and on any serving node colocated
-   * with its executor cache). Cold or cluster-remote shards return None and
-   * the caller keeps the distributed per-round search — correctness is
-   * identical either way (resume is exact; see [[GraphSearcher.ResumableSearch]]),
-   * only the re-paid traversal differs.
+   * Opens only when every needed shard's searcher is warm in THIS JVM
+   * ([[warmSearcher]]). Cold or cluster-remote shards return None and the
+   * caller keeps the per-round search — correctness is identical either
+   * way (resume is exact; see [[GraphSearcher.ResumableSearch]]), only the
+   * re-paid traversal differs.
    */
-  final class ResumableScanHandle private[DiskannIndex] (
-      handles: Seq[(GraphSearcher#ResumableSearch, SearchStats)],
-      metrics: Option[SearchMetrics]) {
-    private var reported = (0L, 0L, 0L)
-
+  final class ResumableScanHandle private[DiskannIndex] (scans: Seq[ShardScan]) {
     /** Top-kk merged hits at this budget, as (qid=0, row_id, dist) rows. */
-    def topK(kk: Int, searchListSize: Int, rescore: Int): Array[Row] = {
-      val merged = handles.iterator
-        .flatMap { case (h, _) =>
-          h.advance(kk, math.max(searchListSize, kk), rescore).take(kk) }
+    def topK(kk: Int, searchListSize: Int, rescore: Int): Array[Row] =
+      scans.iterator
+        .flatMap(_.advance(kk, math.max(searchListSize, kk), rescore).take(kk))
         .toArray
         .sortBy { case (rid, d) => (d, rid) }
         .take(kk)
-      metrics.foreach { m =>
-        val now = handles.map(_._2).foldLeft((0L, 0L, 0L)) { case (acc, st) =>
-          (acc._1 + st.nodesVisited, acc._2 + st.quantizedCmps, acc._3 + st.exactCmps)
-        }
-        m.nodesVisited.add(now._1 - reported._1)
-        m.quantizedCmps.add(now._2 - reported._2)
-        m.exactCmps.add(now._3 - reported._3)
-        reported = now
-      }
-      merged.map { case (rid, d) => Row(0L, rid, d) }
+        .map { case (rid, d) => Row(0L, rid, d) }
+  }
+
+  def openResumableScan(spark: SparkSession, path0: String,
+      qvec: Array[Float], qlabels: Array[Short],
+      tombstones: Set[Long] = Set.empty,
+      metrics: Option[SearchMetrics] = None,
+      nProbe: Int = 0,
+      /** when set, apply SOUND radius shard pruning ([[radiusShardsFor]])
+        * for this report-distance radius — computed from the SAME meta this
+        * scan resolves, so routing and radii can never straddle a
+        * generation swap; None = no pruning */
+      radiusPrune: Option[Double] = None): Option[ResumableScanHandle] = {
+    val v = view(spark, path0)
+    val searchers = v.route(qvec, nProbe, radiusPrune).map(_.toSeq)
+      .getOrElse(v.allShards).map(warmSearcher(v, _))
+    if (searchers.exists(_.isEmpty)) None
+    else {
+      val q = query(0L, qvec, qlabels)
+      Some(new ResumableScanHandle(
+        searchers.map(s => new ShardScan(s.get, q, v.report, tombstones, metrics))))
     }
   }
 
@@ -1924,11 +2110,10 @@ object DiskannIndex {
     // SOUND radius shard pruning (triangle inequality over the stored IVF
     // cluster radii, [[radiusShardsFor]]): at thousands of shards a
     // selective radius visits only the shards whose cluster ball can
-    // intersect it — a 100x serving lever that, unlike nProbe, can never
-    // drop an in-radius row. The prune is computed inside the open, from
-    // the same meta that routes the scan (no generation-swap straddle);
-    // the cold first call still pays the full searchPoint once (which
-    // warms the caches), every resumed round is pruned.
+    // intersect it — unlike nProbe, it can never drop an in-radius row. The
+    // prune is computed inside the open, from the same meta that routes
+    // the scan; the cold first call still pays the full searchPoint once
+    // (which warms the caches), every resumed round is pruned.
     var resumable = openResumableScan(spark, path0, qvec, qlabels,
       tombstones, nProbe = nProbe, radiusPrune = Some(radius))
     def round(kk: Int, l: Int): Seq[(Long, Double)] = resumable match {
@@ -1965,7 +2150,7 @@ object DiskannIndex {
 
   /** THE escalate-until-stable radius loop — ONE definition shared by the
     * point path ([[rangeSearchWithStatus]], multi-shard resumable scan) and
-    * the distributed per-(query, shard) kernel ([[rangeOnSearcher]]) so the
+    * the distributed per-(query, shard) op ([[onShard]]) so the
     * exhaustiveness contract can never drift between them. `round(kk, l)`
     * returns the current top-kk by report distance under exploration bound
     * l; `coverRows` is the row count a drained round (hits < kk) must have
@@ -2006,286 +2191,44 @@ object DiskannIndex {
     (out, confirmed)
   }
 
-  def openResumableScan(spark: SparkSession, path0: String,
-      qvec: Array[Float], qlabels: Array[Short],
-      tombstones: Set[Long] = Set.empty,
-      metrics: Option[SearchMetrics] = None,
-      nProbe: Int = 0,
-      /** when set, apply SOUND radius shard pruning ([[radiusShardsFor]])
-        * for this report-distance radius — computed from the SAME meta this
-        * scan resolves, so routing and radii can never straddle a
-        * generation swap; None = no pruning */
-      radiusPrune: Option[Double] = None): Option[ResumableScanHandle] = {
-    val path = resolveRoot(spark, path0)
-    val meta = loadMeta(spark, path)
-    val metric = Metric(meta.metric)
-    val routed: Seq[Int] =
-      probeShardsFor(meta, metric, qvec, nProbe)
-        .map(_.toSeq.sorted).getOrElse(0 until meta.numShards)
-    // graft.knn.range.shardPrune=false is the ops escape hatch (and the
-    // measurement baseline for RangeProbe) — pruning is sound, so turning
-    // it off can only cost time, never change results
-    val pruneOn =
-      spark.conf.get("graft.knn.range.shardPrune", "true").toBoolean
-    val needed: Seq[Int] =
-      radiusPrune.filter(_ => pruneOn)
-        .flatMap(r => radiusShardsFor(meta, metric, qvec, r)) match {
-        case Some(f) => val keep = f.toSet; routed.filter(keep)
-        case None => routed
-      }
-    val model =
-      if (meta.storage == "sbq")
-        SbqModel(meta.modelCount, meta.modelMean, meta.modelM2, meta.bitsPerDim)
-      else null
-    val searchers = needed.map { sh =>
-      val key = s"$path0#$sh#${meta.shardBuildIds(sh)}"
-      GraphSearcher.peek(key).orElse {
-        // an EMPTY shard (a tombstone wipe rebuilt it to zero rows, or a
-        // degenerate split sub-cluster) never flows through the scan paths
-        // that build searchers, so it would block this open FOREVER — the
-        // whole index's resumable serving wedged by one rowless shard.
-        // Emptiness is decided from the META's exact per-shard row counts,
-        // never the filesystem: a GC racing this open can legitimately
-        // remove a superseded shard dir (even inside a generation whose
-        // _meta survives), and an FS probe would call that "empty" and
-        // silently truncate results. shardRows is immutable per
-        // generation; unknown (pre-round-11) metas never synthesize and
-        // stay on the loud cold path. A merely COLD (non-empty) shard
-        // returns None and the caller pays the normal warming search once.
-        if (meta.shardRows.length == meta.numShards &&
-            meta.shardRows(sh) == 0L)
-          Some(GraphSearcher.getOrBuild(key,
-            () => buildShardSearcher(path, sh, Array.empty, metric, model,
-              meta.hasLabels, meta.dimsToIndex)))
-        else None
-      }
-    }
-    if (searchers.exists(_.isEmpty)) None
-    else {
-      val report = reportDistFn(metric)
-      val nq = Option(qlabels).map(l => LabelSets.normalize(l.clone())).orNull
-      val handles = searchers.map { s =>
-        val st = new SearchStats
-        (s.get.resumable(qvec, nq, rid => tombstones.contains(rid), report, st), st)
-      }
-      Some(new ResumableScanHandle(handles, metrics))
-    }
-  }
-
   /**
    * Fully distributed ANN search for LARGE query sets — the offline
-   * "find neighbors for every row" workload where the query table itself has
-   * millions of rows and collecting/broadcasting it (as [[search]] does for
-   * online batches) would not scale.
-   *
-   * Nothing touches the driver except the tiny `_meta` (centroids): queries
-   * keep their rows distributed, each is routed to its probe shards with the
-   * broadcast centroid table (IVF + nProbe) or fanned to every shard (hash),
-   * and a `cogroup` on the shard key co-locates each whole shard with its
-   * query group in one task — per-shard searchers come from the same
-   * executor cache as the online path. Cost shape at 100 TB: one shuffle of
-   * the (pruned) nodes table + one shuffle of queries×nProbe, then a final
-   * per-query top-k merge; bucketing the nodes table by shard would remove
-   * the nodes shuffle entirely.
+   * "find neighbors for every row" workload where the query table itself
+   * has millions of rows and collecting it (as [[search]] does for online
+   * batches) would not scale. See [[searchTable]]: the nodes table never
+   * shuffles, only the (routed) query fan-out and ~k rows per query do.
    */
   def searchDistributed(spark: SparkSession, path0: String, queries: DataFrame,
       k: Int, searchListSize: Int = 100, rescore: Int = 50,
-      tombstones: Set[Long] = Set.empty, nProbe: Int = 0): DataFrame = {
-    val path = resolveRoot(spark, path0)
-    val meta = loadMeta(spark, path)
-    val metric = Metric(meta.metric)
-    val model =
-      if (meta.storage == "sbq") SbqModel(meta.modelCount, meta.modelMean, meta.modelM2, meta.bitsPerDim)
-      else null
-    val report = reportDistFn(metric)
-    val shardIds = meta.shardBuildIds
-    val cachePath = path0
-    val numShards = meta.numShards
-    val dimsToIndex = meta.dimsToIndex
-    val hasLabels = meta.hasLabels
-    val tombBc = spark.sparkContext.broadcast(tombstones)
-
-    // per-query probe-shard assignment, executor-side over broadcast centroids
-    val routed = meta.partitioner == "ivf" && nProbe > 0 &&
-      nProbe < numShards && meta.centroids.nonEmpty
-    val centBc = spark.sparkContext.broadcast(meta.centroids)
-    val probeShards = udf((qv: mutable.Seq[Float]) =>
-      if (!routed) (0 until numShards).toArray
-      else {
-        val raw = Option(qv).map(_.toArray)
-          .getOrElse(new Array[Float](centBc.value(0).length))
-        val bv = BuildSpace(raw, dimsToIndex, metric)
-        graft.operators.Similarity.IvfModel(centBc.value).nearest(bv, nProbe)
-      })
-    val hasQLabels = queries.columns.contains("qlabels")
-    // explode_outer: a plain explode would make InferFiltersFromGenerate
-    // synthesize size(probeShards(qvec))>0 and re-invoke the routing UDF
-    // (normalize + full centroid scan) once per conjunct per query row
-    val q2 = queries.select(col("qid"), col("qvec"),
-      (if (hasQLabels) col("qlabels")
-       else lit(null).cast(ArrayType(ShortType))).as("qlabels"),
-      explode_outer(probeShards(col("qvec"))).as("shard"))
-      .filter(col("shard").isNotNull)
-
-    // only shards that received at least one query are read at all (the ids
-    // are tiny — numShards ints at most — so this driver hop is free)
-    val neededShards: Seq[Int] =
-      if (routed) q2.select("shard").distinct().collect().map(_.getInt(0)).sorted.toSeq
-      else 0 until numShards
-    import spark.implicits._
-    // an empty (routed) query batch routes nowhere — zero buckets would
-    // make the zip partitioner degenerate, so short-circuit
-    if (neededShards.isEmpty)
-      return spark.emptyDataset[(Long, Long, Double)]
-        .toDF("qid", "row_id", "dist")
-    def answerShard(shard: Int, nodeRows: () => Array[Row],
-        qs: Array[Row]): Iterator[(Long, Long, Double)] = {
-      val searcher = GraphSearcher.getOrBuild(
-        s"$cachePath#$shard#${shardIds(shard)}",
-        () => buildShardSearcher(path, shard, nodeRows(), metric, model,
-          hasLabels, dimsToIndex))
-      val tomb = tombBc.value
-      qs.iterator.flatMap { r =>
-        val qid = r.getAs[Long]("qid")
-        val qvec = Option(r.getAs[mutable.Seq[Float]]("qvec")).map(_.toArray).orNull
-        val qlabels = Option(r.getAs[mutable.Seq[Short]]("qlabels"))
-          .map(s => LabelSets.normalize(s.toArray)).orNull
-        searcher.search(qvec, k, searchListSize, rescore, qlabels,
-          rid => tomb.contains(rid), report)
-          .take(k).iterator.map { case (rid, d) => (qid, rid, d) }
-      }
-    }
-    // Co-location WITHOUT shuffling the index, at ANY shard count: the
-    // shard-aligned scan is one coalesced task per shard BUCKET (same
-    // pruned-scan mechanism as the online path), so zipping it against
-    // queries hash-partitioned to the matching partition index moves ONLY
-    // the query rows — the 100 TB nodes table never crosses the wire, and a
-    // warm executor cache means the unconsumed node iterator skips the
-    // decode entirely. The only cost that grows with shard count is DRIVER
-    // planning (one tiny pruned-scan plan per bucket, single-digit ms each
-    // — the "bucketed by shard directory" equivalent of a bucketed-table
-    // join, without a metastore); past `graft.search.zipMaxShards`
-    // (default 4096) buckets start holding MULTIPLE whole shards, capping
-    // the plan-branch count while keeping the nodes side shuffle-free —
-    // the round-4 cogroup fallback (which shuffled the nodes table past
-    // the cap) is gone.
-    val zipMaxShards =
-      spark.conf.get("graft.search.zipMaxShards", "4096").toInt
-    val partial: org.apache.spark.rdd.RDD[(Long, Long, Double)] = {
-      val bucketSize = math.max(1,
-        math.ceil(neededShards.length.toDouble / zipMaxShards).toInt)
-      val buckets: IndexedSeq[Seq[Int]] =
-        neededShards.grouped(bucketSize).toIndexedSeq
-      val nBuckets = buckets.length
-      val bucketIndex: Map[Int, Int] = buckets.zipWithIndex
-        .flatMap { case (ss, b) => ss.map(_ -> b) }.toMap
-      // one pruned coalesced scan per BUCKET; contiguous shard ranges keep
-      // each branch's directory listing local. bucketSize == 1 is exactly
-      // the round-4 per-shard zip.
-      val nodesRdd =
-        zipNodesRdd(spark, path0, path, meta, neededShards, buckets, bucketSize)
-      val byBucket = new org.apache.spark.Partitioner {
-        override def numPartitions: Int = nBuckets
-        override def getPartition(key: Any): Int =
-          bucketIndex(key.asInstanceOf[Int])
-      }
-      val qRdd = q2.rdd.map(r => (r.getAs[Int]("shard"), r))
-        .partitionBy(byBucket).values
-      // zip alignment rests on coalesce(1) yielding exactly ONE partition
-      // even for an EMPTY shard directory (unused IVF centroid) — true on
-      // Spark 4.x via CoalesceExec.EmptyRDDWithPartitions. If a Spark
-      // upgrade ever changes that, fail with the invariant's name instead
-      // of zipPartitions' opaque "unequal number of partitions".
-      require(nodesRdd.getNumPartitions == nBuckets,
-        s"nodes RDD has ${nodesRdd.getNumPartitions} partitions, expected " +
-          s"$nBuckets (one per shard bucket; empty-shard coalesce(1) must " +
-          "still yield one partition)")
-      require(qRdd.getNumPartitions == nBuckets,
-        s"query RDD has ${qRdd.getNumPartitions} partitions, expected $nBuckets")
-      val bIdxBc = spark.sparkContext.broadcast(bucketIndex)
-      val resRdd = nodesRdd.zipPartitions(qRdd) { (nodeIt, qIt) =>
-        val qs = qIt.toArray
-        if (qs.isEmpty) Iterator.empty
-        else {
-          // materialized on the FIRST cache miss only: a bucket whose every
-          // shard is warm in this JVM never reads its node iterator at all
-          lazy val nodeByShard: Map[Int, Array[Row]] = {
-            val arr = nodeIt.toArray
-            // partition alignment is by construction; fail fast if it
-            // breaks (an EMPTY shard — unused IVF centroid — is legal and
-            // builds an empty searcher)
-            val expected = bIdxBc.value(qs(0).getAs[Int]("shard"))
-            require(arr.isEmpty ||
-              bIdxBc.value(arr(0).getAs[Int]("shard")) == expected,
-              s"nodes partition misaligned with query bucket $expected")
-            arr.groupBy(_.getAs[Int]("shard"))
-          }
-          qs.groupBy(_.getAs[Int]("shard")).iterator
-            .flatMap { case (shard, shardQs) =>
-              answerShard(shard,
-                () => nodeByShard.getOrElse(shard, Array.empty), shardQs)
-            }
-        }
-      }
-      resRdd
-    }
-
-    // final per-query top-k as a MERGEABLE bounded aggregation: map-side
-    // combine caps each task's contribution at k rows per query BEFORE the
-    // shuffle, so only ~k rows per query cross the wire instead of the
-    // nProbe×k per-shard candidates a window row_number merge would shuffle
-    // (and there is no sort). Same (dist, row_id) tie-break, the SAME
-    // TopKAggregator insert kernel — but run as an RDD aggregateByKey
-    // (round 16): the typed groupByKey().agg() form re-paid two Catalyst
-    // QueryExecutions plus an AQE stage-materialization round of pure
-    // driver overhead on EVERY query, while the RDD form plans nothing and
-    // shuffles the identical ≤k-rows-per-(query,task) combiner output.
-    val agg = new graft.operators.Similarity.TopKAggregator(k)
-    val merged = partial
-      .map { case (qid, rid, d) => (qid, (rid, d)) }
-      .aggregateByKey(agg.zero)(
-        (st, v) => agg.reduce(st, v), (a, b) => agg.merge(a, b))
-      .flatMap { case (qid, st) =>
-        st.ids.indices.iterator.map(i => Row(qid, st.ids(i), st.dists(i))) }
-    spark.createDataFrame(merged, StructType(Seq(
-      StructField("qid", LongType, nullable = false),
-      StructField("row_id", LongType, nullable = false),
-      StructField("dist", DoubleType, nullable = false))))
-  }
+      tombstones: Set[Long] = Set.empty, nProbe: Int = 0): DataFrame =
+    searchTable(spark, path0, queries,
+      TopK(k, searchListSize, rescore, nProbe), tombstones, Array.empty)
 
   /**
-   * Shard-LOCAL radius search: the escalate-until-stable exhaustiveness
-   * loop of [[rangeSearchWithStatus]] applied to ONE searcher. Because a
-   * row lives in exactly one shard, per-shard exhaustiveness composes: the
-   * union of confirmed shard answers IS the confirmed global answer — the
-   * property that lets [[rangeSearchDistributed]] run the radius shape
-   * over millions of queries with no cross-shard coordination. Returns
-   * (in-radius hits, confirmed); `confirmed = false` only when the
-   * maxResults cap forced an exit before the in-radius set stabilized.
+   * [[searchDistributed]] + delta freshness — the offline BATCH twin of
+   * [[searchWithDelta]]: the query table is the big side and stays
+   * distributed, the (compaction-bounded) delta is snapshotted once —
+   * BEFORE the main search resolves its generation, so a compact landing in
+   * between can only surface a row on both sides (collapsed), never on
+   * neither — and broadcast. A delta too large to broadcast is the signal
+   * to compact, not to distribute this differently.
    */
-  private def rangeOnSearcher(searcher: GraphSearcher, qvec: Array[Float],
-      qlabels: Array[Short], radius: Double, searchListSize: Int,
-      rescore: Int, maxResults: Int, tombstoned: Long => Boolean,
-      report: (Array[Float], Array[Float]) => Double): (Seq[(Long, Double)], Boolean) = {
-    val rs = searcher.resumable(qvec, qlabels, tombstoned, report)
-    escalateRadius(
-      (kk, l) => rs.advance(kk, math.max(l, kk), math.max(rescore, l)).toSeq,
-      radius, searchListSize, maxResults, searcher.n)
+  def searchDistributedFresh(spark: SparkSession, path0: String,
+      queries: DataFrame, delta: DataFrame, k: Int,
+      searchListSize: Int = 100, rescore: Int = 50,
+      tombstones: Set[Long] = Set.empty, nProbe: Int = 0): DataFrame = {
+    val snap = deltaSnapshot(spark, delta)
+    searchTable(spark, path0, queries,
+      TopK(k, searchListSize, rescore, nProbe), tombstones, snap)
   }
 
   /**
    * Fully distributed RADIUS search for LARGE query sets — the offline
    * "every row's in-radius matches" workload (positive-pair mining,
    * duplicate sweeps at a distance threshold), the radius twin of
-   * [[searchDistributed]]. Same co-location kernel (zip-partitioned
-   * pruned shard scans, warm executor searchers, the nodes table never
-   * shuffles); per (query, shard) the answer comes from the shard-local
-   * escalate-until-stable loop ([[rangeOnSearcher]]), whose per-shard
-   * confirmations compose into global exhaustiveness because every row
-   * lives in exactly one shard. Routing uses the SOUND triangle-inequality
-   * prune over broadcast (centroids, radii) when stored — per query only
-   * the shards whose cluster ball can intersect the query ball are
-   * visited; hash/unknown-radii indexes fan to every shard.
+   * [[searchDistributed]]. Per (query, shard) the answer comes from the
+   * shard-local escalate-until-stable loop ([[onShard]]); routing uses the
+   * SOUND triangle-inequality prune when radii are stored.
    *
    * Truncation is LOUD, never silent: a (query, shard) pair whose
    * in-radius set could not be confirmed under `maxResults` (per shard)
@@ -2296,436 +2239,22 @@ object DiskannIndex {
   def rangeSearchDistributed(spark: SparkSession, path0: String,
       queries: DataFrame, radius: Double, searchListSize: Int = 100,
       rescore: Int = 50, tombstones: Set[Long] = Set.empty,
-      maxResults: Int = 65536, strict: Boolean = true): DataFrame = {
-    val path = resolveRoot(spark, path0)
-    val meta = loadMeta(spark, path)
-    val metric = Metric(meta.metric)
-    val model =
-      if (meta.storage == "sbq") SbqModel(meta.modelCount, meta.modelMean, meta.modelM2, meta.bitsPerDim)
-      else null
-    val report = reportDistFn(metric)
-    val shardIds = meta.shardBuildIds
-    val cachePath = path0
-    val numShards = meta.numShards
-    val dimsToIndex = meta.dimsToIndex
-    val hasLabels = meta.hasLabels
-    val tombBc = spark.sparkContext.broadcast(tombstones)
-    val metaBc = spark.sparkContext.broadcast(meta)
+      maxResults: Int = 65536, strict: Boolean = true): DataFrame =
+    searchTable(spark, path0, queries,
+      Within(radius, searchListSize, rescore, maxResults, strict), tombstones,
+      Array.empty)
 
-    // per-query shard routing, executor-side: the same sound prune as the
-    // point path ([[radiusShardsFor]]) over the broadcast meta — soundness
-    // means a pruned-away shard provably holds nothing within the radius,
-    // so routing can never truncate the answer
-    val pruneOn =
-      spark.conf.get("graft.knn.range.shardPrune", "true").toBoolean
-    val met = metric
-    val probeShards = udf((qv: mutable.Seq[Float]) => {
-      val m = metaBc.value
-      val raw = Option(qv).map(_.toArray)
-        .getOrElse(new Array[Float](
-          if (m.centroids.nonEmpty) m.centroids(0).length else 1))
-      (if (pruneOn) radiusShardsFor(m, met, raw, radius) else None)
-        .getOrElse((0 until m.numShards).toArray)
-    })
-    val hasQLabels = queries.columns.contains("qlabels")
-    val q2 = queries.select(col("qid"), col("qvec"),
-      (if (hasQLabels) col("qlabels")
-       else lit(null).cast(ArrayType(ShortType))).as("qlabels"),
-      explode_outer(probeShards(col("qvec"))).as("shard"))
-      .filter(col("shard").isNotNull)
-
-    val neededShards: Seq[Int] =
-      if (meta.partitioner == "ivf" && pruneOn &&
-          meta.shardRadii.length == numShards)
-        q2.select("shard").distinct().collect().map(_.getInt(0)).sorted.toSeq
-      else 0 until numShards
-    import spark.implicits._
-    // an empty query batch routes nowhere — zero buckets would make the
-    // zip partitioner degenerate, so short-circuit the empty result
-    if (neededShards.isEmpty)
-      return spark.emptyDataset[(Long, Long, Double)]
-        .toDF("qid", "row_id", "dist")
-    val sl = searchListSize
-    val rc = rescore
-    val mr = maxResults
-    val strictOn = strict
-    def answerShard(shard: Int, nodeRows: () => Array[Row],
-        qs: Array[Row]): Iterator[(Long, Long, Double)] = {
-      val searcher = GraphSearcher.getOrBuild(
-        s"$cachePath#$shard#${shardIds(shard)}",
-        () => buildShardSearcher(path, shard, nodeRows(), metric, model,
-          hasLabels, dimsToIndex))
-      val tomb = tombBc.value
-      qs.iterator.flatMap { r =>
-        val qid = r.getAs[Long]("qid")
-        val qvec = Option(r.getAs[mutable.Seq[Float]]("qvec")).map(_.toArray).orNull
-        val qlabels = Option(r.getAs[mutable.Seq[Short]]("qlabels"))
-          .map(s => LabelSets.normalize(s.toArray)).orNull
-        val (hits, confirmed) = rangeOnSearcher(searcher, qvec, qlabels,
-          radius, sl, rc, mr, rid => tomb.contains(rid), report)
-        if (!confirmed && strictOn)
-          throw new IllegalStateException(
-            s"rangeSearchDistributed: query $qid shard $shard hit the " +
-              s"graft maxResults cap ($mr) before its in-radius set " +
-              "stabilized — raise maxResults, or pass strict=false to " +
-              "keep possibly-partial rows")
-        hits.iterator.map { case (rid, d) => (qid, rid, d) }
-      }
-    }
-    // same bucketed zip co-location as searchDistributed: nodes never
-    // shuffle, only the (pruned) query fan-out does
-    val zipMaxShards =
-      spark.conf.get("graft.search.zipMaxShards", "4096").toInt
-    val bucketSize = math.max(1,
-      math.ceil(neededShards.length.toDouble / zipMaxShards).toInt)
-    val buckets: IndexedSeq[Seq[Int]] =
-      neededShards.grouped(bucketSize).toIndexedSeq
-    val nBuckets = buckets.length
-    val bucketIndex: Map[Int, Int] = buckets.zipWithIndex
-      .flatMap { case (ss, b) => ss.map(_ -> b) }.toMap
-    val nodesRdd =
-      zipNodesRdd(spark, path0, path, meta, neededShards, buckets, bucketSize)
-    val byBucket = new org.apache.spark.Partitioner {
-      override def numPartitions: Int = nBuckets
-      override def getPartition(key: Any): Int =
-        bucketIndex(key.asInstanceOf[Int])
-    }
-    val qRdd = q2.rdd.map(r => (r.getAs[Int]("shard"), r))
-      .partitionBy(byBucket).values
-    require(nodesRdd.getNumPartitions == nBuckets,
-      s"nodes RDD has ${nodesRdd.getNumPartitions} partitions, expected $nBuckets")
-    require(qRdd.getNumPartitions == nBuckets,
-      s"query RDD has ${qRdd.getNumPartitions} partitions, expected $nBuckets")
-    val bIdxBc = spark.sparkContext.broadcast(bucketIndex)
-    val resRdd = nodesRdd.zipPartitions(qRdd) { (nodeIt, qIt) =>
-      val qs = qIt.toArray
-      if (qs.isEmpty) Iterator.empty
-      else {
-        lazy val nodeByShard: Map[Int, Array[Row]] = {
-          val arr = nodeIt.toArray
-          val expected = bIdxBc.value(qs(0).getAs[Int]("shard"))
-          require(arr.isEmpty ||
-            bIdxBc.value(arr(0).getAs[Int]("shard")) == expected,
-            s"nodes partition misaligned with query bucket $expected")
-          arr.groupBy(_.getAs[Int]("shard"))
-        }
-        qs.groupBy(_.getAs[Int]("shard")).iterator
-          .flatMap { case (shard, shardQs) =>
-            answerShard(shard,
-              () => nodeByShard.getOrElse(shard, Array.empty), shardQs)
-          }
-      }
-    }
-    // a row lives in exactly one shard: no cross-shard duplicates, no merge
-    spark.createDataset(resRdd).toDF("qid", "row_id", "dist")
-  }
-
-  /**
-   * [[rangeSearchDistributed]] + delta freshness — the radius twin of
-   * [[searchDistributedFresh]], same role flip: the query table is the big
-   * side and stays distributed, the (compaction-bounded) delta collects
-   * once and BROADCASTS; every query partition adds an exact map-side
-   * radius pass over it (tombstone-masked, label-filtered with the
-   * searchWithDelta rules). A row transiently in both main and delta
-   * (compact mid-flight) is collapsed by (qid, row_id) min-dist.
-   */
+  /** [[rangeSearchDistributed]] + delta freshness — the radius twin of
+    * [[searchDistributedFresh]], same snapshot-then-resolve order. */
   def rangeSearchDistributedFresh(spark: SparkSession, path0: String,
       queries: DataFrame, delta: DataFrame, radius: Double,
       searchListSize: Int = 100, rescore: Int = 50,
       tombstones: Set[Long] = Set.empty, maxResults: Int = 65536,
       strict: Boolean = true): DataFrame = {
-    val meta = loadMeta(spark, resolveRoot(spark, path0))
-    val report = reportDistFn(Metric(meta.metric))
-    // SNAPSHOT the delta before the main search resolves its generation
-    // (the race-with-compact invariant — see searchDistributedFresh)
-    val hasDLabels = delta.columns.contains("labels")
-    // enforced, not advisory (the knnGraph guard discipline): the limit
-    // caps what can reach the driver, one extra row proves oversize
-    val maxDeltaBc = spark.conf
-      .get("graft.delta.maxBroadcastRows", "2000000").toInt
-    val collected = delta.limit(maxDeltaBc + 1).collect()
-    require(collected.length <= maxDeltaBc,
-      s"rangeSearchDistributedFresh: pending delta exceeds " +
-        s"graft.delta.maxBroadcastRows ($maxDeltaBc) — the fresh batch " +
-        "paths broadcast the delta, which the compaction contract keeps " +
-        "small; fold it with StreamingIngest.compactNow (or enable " +
-        "autoCompact), or raise the knob if the driver can hold it")
-    val deltaRows: Array[(Long, Array[Float], Array[Short])] =
-      collected.map { r =>
-        (r.getAs[Long]("row_id"),
-          Option(r.getAs[mutable.Seq[Float]]("vec")).map(_.toArray).orNull,
-          if (hasDLabels) Option(r.getAs[mutable.Seq[Short]]("labels"))
-            .map(s => LabelSets.normalize(s.toArray))
-            .getOrElse(Array.emptyShortArray)
-          else null)
-      }
-    val main = rangeSearchDistributed(spark, path0, queries, radius,
-      searchListSize, rescore, tombstones, maxResults, strict)
-    val dBc = spark.sparkContext.broadcast(deltaRows)
-    val tombBc = spark.sparkContext.broadcast(tombstones)
-    val hasQLabels = queries.columns.contains("qlabels")
-    val q3 = queries.select(col("qid"), col("qvec"),
-      (if (hasQLabels) col("qlabels")
-       else lit(null).cast(ArrayType(ShortType))).as("qlabels"))
-    val resultSchema = StructType(Seq(
-      StructField("qid", LongType, nullable = false),
-      StructField("row_id", LongType, nullable = false),
-      StructField("dist", DoubleType, nullable = false)))
-    val deltaHits = q3.mapPartitions { it =>
-      val tomb = tombBc.value
-      val dr = dBc.value
-      it.flatMap { r =>
-        val qid = r.getAs[Long]("qid")
-        val qv0 = Option(r.getAs[mutable.Seq[Float]]("qvec")).map(_.toArray).orNull
-        val ql = Option(r.getAs[mutable.Seq[Short]]("qlabels"))
-          .map(s => LabelSets.normalize(s.toArray)).orNull
-        dr.iterator.flatMap { case (rid, v, lbs) =>
-          deltaRadiusMatch(rid, v, lbs, qv0, ql, radius, tomb.contains,
-            report).map(d => Row(qid, rid, d)).iterator
-        }
-      }
-    }(org.apache.spark.sql.Encoders.row(resultSchema))
-    main.unionByName(deltaHits)
-      .groupBy(col("qid"), col("row_id")).agg(min(col("dist")).as("dist"))
-  }
-
-  /**
-   * Search main index + an unindexed delta (micro-batch appends, §3.3 / G9):
-   * the delta side is answered by exact brute force and merged into the final
-   * top-k. `delta` has columns (row_id, vec [, labels]).
-   */
-  def searchWithDelta(spark: SparkSession, path: String, queries: DataFrame,
-      delta: DataFrame, k: Int, searchListSize: Int = 100, rescore: Int = 50,
-      tombstones: Set[Long] = Set.empty,
-      metrics: Option[SearchMetrics] = None, nProbe: Int = 0): DataFrame = {
-    val meta = loadMeta(spark, path)
-    val metric = Metric(meta.metric)
-    val report = reportDistFn(metric)
-    val main = search(spark, path, queries, k, searchListSize, rescore,
-      tombstones, metrics, nProbe)
-
-    val hasQLabels = queries.columns.contains("qlabels")
-    val hasDLabels = delta.columns.contains("labels")
-    val qRows = queries.collect().map { r =>
-      (r.getAs[Long]("qid"),
-        // null query vector => zero-vector search, same as the main path
-        // (labels/mod.rs:214-216)
-        Option(r.getAs[mutable.Seq[Float]]("qvec")).map(_.toArray).orNull,
-        if (hasQLabels) Option(r.getAs[mutable.Seq[Short]]("qlabels"))
-          .map(s => LabelSets.normalize(s.toArray)).orNull
-        else null)
-    }
-    val qBc = spark.sparkContext.broadcast(qRows)
-    val tombBc = spark.sparkContext.broadcast(tombstones)
-    val resultSchema = StructType(Seq(
-      StructField("qid", LongType, nullable = false),
-      StructField("row_id", LongType, nullable = false),
-      StructField("dist", DoubleType, nullable = false)))
-
-    val deltaHits = delta.mapPartitions { it =>
-      val tomb = tombBc.value
-      it.flatMap { r =>
-        val rid = r.getAs[Long]("row_id")
-        if (tomb.contains(rid)) Iterator.empty
-        else {
-          val v = r.getAs[mutable.Seq[Float]]("vec").toArray
-          val lbs = if (hasDLabels) Option(r.getAs[mutable.Seq[Short]]("labels"))
-            .map(s => LabelSets.normalize(s.toArray)).getOrElse(Array.emptyShortArray)
-          else null
-          qBc.value.iterator.flatMap { case (qid, qv0, ql) =>
-            val qv = if (qv0 == null) new Array[Float](v.length) else qv0
-            val ok = ql == null || (lbs != null && LabelSets.overlaps(lbs, ql))
-            if (ok) Iterator.single(Row(qid, rid, report(v, qv))) else Iterator.empty
-          }
-        }
-      }
-    }(org.apache.spark.sql.Encoders.row(resultSchema))
-
-    main.unionByName(deltaHits)
-      // a row may transiently exist in BOTH the main graph and the delta
-      // (compaction folded the delta in, its file delete not yet visible);
-      // collapse by row_id so the top-k never contains duplicates
-      .groupBy(col("qid"), col("row_id")).agg(min(col("dist")).as("dist"))
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy(col("qid")).orderBy(col("dist"), col("row_id"))))
-      .filter(col("rnk") <= k)
-      .drop("rnk")
-  }
-
-  /**
-   * Exact radius pass over an UNINDEXED delta (the radius twin of
-   * [[searchWithDelta]]'s delta kernel): every delta row within `radius`
-   * of the query in REPORT distance, tombstone-masked, label-filtered with
-   * the same empty-set/null rules as the graph traversal
-   * (labels/mod.rs:188-204). One map-side job over the (small-by-the-
-   * compaction-contract) delta snapshot; the result collects because the
-   * caller ([[graft.streaming.StreamingIngest.rangeSearchFresh]]) merges
-   * it with the driver-side graph hits — both are bounded by the
-   * maxResults discipline above this.
-   */
-  /** Score one delta row against one radius query — THE definition of the
-    * delta-side radius semantics (tombstone mask, null-vector row skip,
-    * searchWithDelta's label rules incl. unlabeled-delta-vs-labeled-query
-    * = no match, null query = zero-vector search, labels/mod.rs:214-216),
-    * shared by [[rangeOverDelta]] and [[rangeSearchDistributedFresh]] so
-    * the two fresh radius paths can never drift. `lbs` must already be
-    * normalized (null = delta has no labels column), `ql` likewise. */
-  private def deltaRadiusMatch(rid: Long, v: Array[Float],
-      lbs: Array[Short], qv0: Array[Float], ql: Array[Short],
-      radius: Double, tombstoned: Long => Boolean,
-      report: (Array[Float], Array[Float]) => Double): Option[Double] =
-    if (tombstoned(rid) || v == null) None
-    else if (!(ql == null || (lbs != null && LabelSets.overlaps(lbs, ql))))
-      None
-    else {
-      val qv = if (qv0 == null) new Array[Float](v.length) else qv0
-      val d = report(v, qv)
-      if (d <= radius) Some(d) else None
-    }
-
-  private[graft] def rangeOverDelta(spark: SparkSession, path: String,
-      delta: DataFrame, qvec: Array[Float], radius: Double,
-      qlabels: Array[Short] = null,
-      tombstones: Set[Long] = Set.empty,
-      /** driver-boundedness: the collect below is capped at maxResults + 1
-        * rows (a Spark-side limit, so overflow never reaches the driver) —
-        * one extra row lets [[graft.streaming.StreamingIngest
-        * .rangeSearchFresh]] detect the overflow and return unconfirmed
-        * (its caller's exact-scan bail), the same loud-truncation
-        * discipline as the graph side's cap. 0 = uncapped (tests). */
-      maxResults: Int = 0): Seq[(Long, Double)] = {
-    val meta = loadMeta(spark, path)
-    val report = reportDistFn(Metric(meta.metric))
-    val hasDLabels = delta.columns.contains("labels")
-    val nq = Option(qlabels).map(l => LabelSets.normalize(l.clone())).orNull
-    val tombBc = spark.sparkContext.broadcast(tombstones)
-    val qv0 = qvec
-    val hitsDs = delta.mapPartitions { it =>
-      val tomb = tombBc.value
-      it.flatMap { r =>
-        val rid = r.getAs[Long]("row_id")
-        // tombstone short-circuit BEFORE materializing the vector/labels:
-        // a heavily-tombstoned delta would otherwise pay an array copy +
-        // label normalize per masked row for no output (the kernel
-        // re-checks — harmless)
-        if (tomb.contains(rid)) Iterator.empty
-        else {
-          val v = Option(r.getAs[mutable.Seq[Float]]("vec")).map(_.toArray).orNull
-          val lbs = if (hasDLabels) Option(r.getAs[mutable.Seq[Short]]("labels"))
-            .map(s => LabelSets.normalize(s.toArray))
-            .getOrElse(Array.emptyShortArray)
-          else null
-          deltaRadiusMatch(rid, v, lbs, qv0, nq, radius, tomb.contains, report)
-            .map(rid -> _).iterator
-        }
-      }
-    }(org.apache.spark.sql.Encoders.tuple(
-      org.apache.spark.sql.Encoders.scalaLong,
-      org.apache.spark.sql.Encoders.scalaDouble))
-    (if (maxResults > 0) hitsDs.limit(maxResults + 1) else hitsDs)
-      .collect().toSeq
-  }
-
-  /**
-   * [[searchDistributed]] + delta freshness — the offline BATCH twin of
-   * [[searchWithDelta]], closing the freshness gap where a large offline
-   * job had to run `compact()` first to see recent appends. The roles flip
-   * versus the online path: there the (small) query batch broadcasts and
-   * the delta is scanned; here the query table is the big side, so the
-   * delta — small versus the index by the compaction contract — collects
-   * once and BROADCASTS, and every query partition scores it map-side with
-   * a bounded per-query top-k heap. No extra shuffle of the query table;
-   * the only added wide op is the final ≤2k-rows-per-query re-merge
-   * through the same mergeable [[graft.operators.Similarity.TopKAggregator]].
-   * A delta too large to broadcast is the signal to compact, not to
-   * distribute this differently.
-   */
-  def searchDistributedFresh(spark: SparkSession, path0: String,
-      queries: DataFrame, delta: DataFrame, k: Int,
-      searchListSize: Int = 100, rescore: Int = 50,
-      tombstones: Set[Long] = Set.empty, nProbe: Int = 0): DataFrame = {
-    // SNAPSHOT the delta BEFORE the main search resolves its generation
-    // (the race-with-compact invariant, see StreamingIngest.searchFresh): a
-    // compact landing after this collect moves these same rows into the
-    // generation the main search then resolves — duplicates collapse below,
-    // nothing is lost. Collecting after resolving can lose rows.
-    val hasDLabels = delta.columns.contains("labels")
-    val hasQLabels = queries.columns.contains("qlabels")
-    // sort + dedup by row_id: foreachBatch ingest is at-least-once, so a
-    // retried micro-batch appends the same row twice — without the dedup,
-    // both copies enter the bounded heap and can evict a DISTINCT true
-    // neighbor from the top-k (the online twin collapses by row_id before
-    // ranking and is immune)
-    // enforced, not advisory (the knnGraph guard discipline): the limit
-    // caps what can reach the driver, one extra row proves oversize
-    val maxDeltaBc = spark.conf
-      .get("graft.delta.maxBroadcastRows", "2000000").toInt
-    val collected =
-      delta.filter(col("vec").isNotNull).limit(maxDeltaBc + 1).collect()
-    require(collected.length <= maxDeltaBc,
-      s"searchDistributedFresh: pending delta exceeds " +
-        s"graft.delta.maxBroadcastRows ($maxDeltaBc) — the fresh batch " +
-        "paths broadcast the delta, which the compaction contract keeps " +
-        "small; fold it with StreamingIngest.compactNow (or enable " +
-        "autoCompact), or raise the knob if the driver can hold it")
-    val deltaRows: Array[(Long, Array[Float], Array[Short])] =
-      collected.map { r =>
-        (r.getAs[Long]("row_id"), r.getAs[mutable.Seq[Float]]("vec").toArray,
-          if (hasDLabels) Option(r.getAs[mutable.Seq[Short]]("labels"))
-            .map(s => LabelSets.normalize(s.toArray)).getOrElse(Array.emptyShortArray)
-          else null)
-      }.filterNot { case (rid, _, _) => tombstones.contains(rid) }
-        .sortBy(_._1).distinctBy(_._1)
-
-    val meta = loadMeta(spark, path0)
-    val report = reportDistFn(Metric(meta.metric))
-    val main = searchDistributed(spark, path0, queries, k, searchListSize,
-      rescore, tombstones, nProbe)
-    val dBc = spark.sparkContext.broadcast(deltaRows)
-    val resultSchema = StructType(Seq(
-      StructField("qid", LongType, nullable = false),
-      StructField("row_id", LongType, nullable = false),
-      StructField("dist", DoubleType, nullable = false)))
-    val deltaHits = queries.mapPartitions { it =>
-      val d = dBc.value
-      val ord = Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Long)
-      it.flatMap { r =>
-        val qid = r.getAs[Long]("qid")
-        val qv0 = Option(r.getAs[mutable.Seq[Float]]("qvec")).map(_.toArray).orNull
-        val ql = if (hasQLabels) Option(r.getAs[mutable.Seq[Short]]("qlabels"))
-          .map(s => LabelSets.normalize(s.toArray)).orNull else null
-        // bounded per-query heap: only k delta rows leave the partition
-        val heap = mutable.PriorityQueue.empty[(Double, Long)](ord)
-        d.foreach { case (rid, v, lbs) =>
-          val ok = ql == null || (lbs != null && LabelSets.overlaps(lbs, ql))
-          if (ok) {
-            val qv = if (qv0 == null) new Array[Float](v.length) else qv0
-            val dist = report(v, qv)
-            if (heap.size < k) heap.enqueue((dist, rid))
-            else if (ord.lt((dist, rid), heap.head)) {
-              heap.dequeue(); heap.enqueue((dist, rid))
-            }
-          }
-        }
-        heap.iterator.map { case (dist, rid) => Row(qid, rid, dist) }
-      }
-    }(org.apache.spark.sql.Encoders.row(resultSchema))
-
-    // collapse transient main∩delta duplicates (min dist per (qid, row_id)),
-    // then the same bounded mergeable top-k merge as searchDistributed —
-    // no sort, ~k rows/query; run as RDD ops with the same TopKAggregator
-    // insert kernel (round 16): the typed groupBy/groupByKey form re-paid
-    // two Catalyst plans + AQE stage materializations per query
-    val agg = new graft.operators.Similarity.TopKAggregator(k)
-    val merged = main.rdd.union(deltaHits.rdd)
-      .map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2)))
-      .reduceByKey((a, b) => math.min(a, b))
-      .map { case ((qid, rid), d) => (qid, (rid, d)) }
-      .aggregateByKey(agg.zero)(
-        (st, v) => agg.reduce(st, v), (a, b) => agg.merge(a, b))
-      .flatMap { case (qid, st) =>
-        st.ids.indices.iterator.map(i => Row(qid, st.ids(i), st.dists(i))) }
-    spark.createDataFrame(merged, resultSchema)
+    val snap = deltaSnapshot(spark, delta)
+    searchTable(spark, path0, queries,
+      Within(radius, searchListSize, rescore, maxResults, strict), tombstones,
+      snap)
   }
 
   /** Index introspection (V2, vacuum.rs:138-157 page-count analog): size and

@@ -43,9 +43,21 @@ object Similarity {
   case class TopKState(ids: Array[Long], dists: Array[Double])
 
   /** Bounded top-k by (dist, id): mergeable, so Spark runs it as a 2-phase
-    * aggregation with map-side combine. */
-  class TopKAggregator(k: Int) extends Aggregator[(Long, Double), TopKState, Seq[(Long, Double)]] {
+    * aggregation with map-side combine. With `distinctIds`, an id already
+    * held keeps only its smaller distance, so the result is the top-k of
+    * the (id -> min distance) collapse in the same single pass: a copy of
+    * an id can never take a second slot from a distinct id. */
+  class TopKAggregator(k: Int, distinctIds: Boolean = false)
+      extends Aggregator[(Long, Double), TopKState, Seq[(Long, Double)]] {
     private def insert(s: TopKState, id: Long, d: Double): TopKState = {
+      if (distinctIds) {
+        val at = s.ids.indexOf(id)
+        if (at >= 0) {
+          if (d >= s.dists(at)) return s
+          return insert(TopKState(s.ids.patch(at, Nil, 1),
+            s.dists.patch(at, Nil, 1)), id, d)
+        }
+      }
       val n = s.ids.length
       if (n >= k && (d > s.dists(n - 1) ||
           (d == s.dists(n - 1) && id >= s.ids(n - 1)))) return s

@@ -160,7 +160,8 @@ object StreamingIngest {
   }
 
   /**
-   * Snapshot the delta as one DataFrame, or None when it is empty.
+   * Snapshot the delta, or None when it is empty — `load` turns the
+   * resolved read into what the caller keeps.
    *
    * List-then-read race defense: `ignoreMissingFiles` only skips files that
    * vanish DURING execution — Spark's plan-time path resolution
@@ -172,34 +173,27 @@ object StreamingIngest {
    * that persistently list but never resolve (a real corruption, not the
    * race) surface the last error instead of being silently treated as
    * empty.
-   *
-   * `eager = true` additionally localCheckpoints the snapshot — lineage
-   * truncation, so a lost partition FAILS loud rather than silently
-   * recomputing-to-empty from deleted files (see [[searchFresh]]).
    */
-  // per-JVM memo of the EAGER (checkpointed) delta snapshot, keyed by the
-  // session instance + the delta listing's fingerprint (names + sizes +
-  // mtimes — delta files are write-once, renamed in; the deltaCountCache
-  // discipline): every fresh-serving query was re-reading and
-  // re-checkpointing an UNCHANGED delta — one eager Spark job of fixed
-  // overhead per query. An append or compact changes the listing, so the
-  // fingerprint invalidates naturally; a superseded entry's checkpoint
-  // blocks are freed by the ContextCleaner once unreachable. Index STATE
-  // memoization (the GraphSearcher-cache class) — never query results.
-  // round-16 hardening (ADVICE): keyed on applicationId (unique per
-  // context; identityHashCode can be reused after a GC'd session and would
-  // serve a checkpointed DataFrame bound to a dead context) and bounded —
-  // an unbounded map pins one localCheckpointed snapshot per dead
+  // per-JVM memo of each snapshot kind, keyed by the session's
+  // applicationId + index path + kind, validated by the delta listing's
+  // fingerprint (names + sizes + mtimes — delta files are write-once,
+  // renamed in): every fresh-serving query was re-reading an UNCHANGED
+  // delta. An append or compact changes the listing, so the fingerprint
+  // invalidates naturally; a hit requires the CURRENT listing to match, so
+  // the race-with-compact window is identical to a fresh list-then-read.
+  // Index STATE memoization (the GraphSearcher-cache class) — never query
+  // results. applicationId, not identityHashCode (reusable after a GC'd
+  // session), and bounded — an unbounded map pins one snapshot per dead
   // (session, index) pair on the driver for the JVM's life.
   private val deltaSnapshotCache = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[String, (String, DataFrame)](16, 0.75f, true) {
+    new java.util.LinkedHashMap[String, (String, AnyRef)](16, 0.75f, true) {
       override def removeEldestEntry(
-          e: java.util.Map.Entry[String, (String, DataFrame)]): Boolean =
+          e: java.util.Map.Entry[String, (String, AnyRef)]): Boolean =
         size() > 16
     })
 
-  private def readDeltaSnapshot(spark: SparkSession, indexPath: String,
-      eager: Boolean): Option[DataFrame] = {
+  private def snapshotDelta[T <: AnyRef](spark: SparkSession,
+      indexPath: String, kind: String)(load: DataFrame => T): Option[T] = {
     val maxAttempts = 4
     var lastErr: Throwable = null
     var attempt = 0
@@ -207,32 +201,17 @@ object StreamingIngest {
       attempt += 1
       val sts = deltaFileStatuses(spark, indexPath)
       if (sts.isEmpty) return None
-      val files = sts.map(_.getPath)
-      // eager and lazy snapshots are cached under distinct keys: the eager
-      // entry is a localCheckpointed DataFrame, the lazy one (round 16) is
-      // just the RESOLVED read — un-memoized, every distributed fresh
-      // search re-paid the schema-inference Spark job + file-index build
-      // for an UNCHANGED delta. A hit requires the CURRENT listing to
-      // match, so the race-with-compact window is identical to a fresh
-      // list-then-read.
-      val key = s"${spark.sparkContext.applicationId}#$indexPath" +
-        (if (eager) "" else "#lazy")
+      val key = s"${spark.sparkContext.applicationId}#$indexPath#$kind"
       val fp = sts.map(s =>
           s"${s.getPath.getName}:${s.getLen}:${s.getModificationTime}")
         .sorted.mkString("|")
       val hit = deltaSnapshotCache.get(key)
-      if (hit != null && hit._1 == fp) return Some(hit._2)
+      if (hit != null && hit._1 == fp) return Some(hit._2.asInstanceOf[T])
       try {
-        val df = spark.read.option("ignoreMissingFiles", "true")
-          .parquet(files.map(_.toString).toIndexedSeq: _*)
-        return Some(if (eager) {
-          val snap = df.localCheckpoint(true)
-          deltaSnapshotCache.put(key, (fp, snap))
-          snap
-        } else {
-          deltaSnapshotCache.put(key, (fp, df))
-          df
-        })
+        val snap = load(spark.read.option("ignoreMissingFiles", "true")
+          .parquet(sts.map(_.getPath.toString).toIndexedSeq: _*))
+        deltaSnapshotCache.put(key, (fp, snap))
+        return Some(snap)
       } catch {
         // plan-time path-not-exist from the list-then-read race; re-list
         case e: org.apache.spark.sql.AnalysisException => lastErr = e
@@ -240,6 +219,21 @@ object StreamingIngest {
     }
     throw lastErr
   }
+
+  /** The resolved (not yet read) delta: maybeCompact's row counts. */
+  private def readDeltaSnapshot(spark: SparkSession,
+      indexPath: String): Option[DataFrame] =
+    snapshotDelta(spark, indexPath, "df")(identity)
+
+  /** The delta rows every fresh search scores — the capped driver snapshot
+    * of [[DiskannIndex.deltaSnapshot]] (NULL vectors dropped, replays
+    * collapsed by row_id); empty when no delta is pending. Collected in
+    * full before the caller resolves the main generation, so a compaction
+    * deleting the delta files afterwards cannot lose its rows. */
+  private[graft] def deltaRows(spark: SparkSession,
+      indexPath: String): Array[DiskannIndex.DeltaRow] =
+    snapshotDelta(spark, indexPath, "rows")(DiskannIndex.deltaSnapshot(spark, _))
+      .getOrElse(Array.empty)
 
   /** True iff un-compacted micro-batch appends are pending — the signal the
     * SQL-planned scan uses to route through the delta-merging search. */
@@ -290,49 +284,43 @@ object StreamingIngest {
     else { deltaCountCache.put(indexPath, (fp, n)); n }
   }
 
-  /** Search main graph + current delta (exact over the delta side).
+  /** The state every fresh read sees, taken BEFORE the search resolves its
+    * generation: the caller's ad-hoc tombstones plus the durable registry
+    * (rows deleted via [[DiskannIndex.deleteRows]] stay invisible without
+    * the caller threading the set through — scan.rs:229-235 visibility),
+    * and the delta snapshot.
     *
-    * Race-with-compact invariant: the delta is SNAPSHOTTED — eagerly
-    * localCheckpoint'ed, which truncates lineage — BEFORE the main
-    * generation is resolved. A compaction landing in between moves the
-    * delta rows INTO the generation the later resolve then picks up, and
-    * the re-listing snapshot tolerates the already-consumed delta files —
-    * so every row is visible on at least one side, and the main∪delta
-    * row_id collapse removes doubles. The reverse order (resolve first,
-    * read delta lazily) can lose rows: old generation + deleted delta
-    * files. localCheckpoint over persist for two reasons: a lost cached
-    * partition cannot silently recompute-to-empty from deleted files (no
-    * lineage ⇒ the query FAILS loud instead of dropping rows), and its
-    * blocks are released by the ContextCleaner when the result is
-    * garbage-collected, so per-micro-batch serving loops accumulate no
-    * cache registry. */
+    * Race-with-compact invariant: a compaction landing after the snapshot
+    * moves the delta rows INTO the generation the later resolve picks up,
+    * so every row is visible on at least one side, and the core's
+    * (qid, row_id) collapse removes doubles. The reverse order (resolve
+    * first, read the delta later) can lose rows: old generation + deleted
+    * delta files. */
+  private def freshState(spark: SparkSession, indexPath: String,
+      tombstones: Set[Long]): (Set[Long], Array[DiskannIndex.DeltaRow]) =
+    (tombstones ++ DiskannIndex.loadTombstones(spark, indexPath),
+      deltaRows(spark, indexPath))
+
+  /** Search main graph + current delta (exact over the delta side) — the
+    * freshness-aware [[DiskannIndex.search]]. */
   def searchFresh(spark: SparkSession, indexPath: String, queries: DataFrame,
       k: Int, searchListSize: Int = 100, rescore: Int = 50,
       tombstones: Set[Long] = Set.empty,
       metrics: Option[DiskannIndex.SearchMetrics] = None,
       nProbe: Int = 0): DataFrame = {
-    // the caller's ad-hoc set plus the durable registry: rows deleted via
-    // [[DiskannIndex.deleteRows]] stay invisible here without the caller
-    // having to thread the set through (scan.rs:229-235 visibility)
-    val tombs = tombstones ++ DiskannIndex.loadTombstones(spark, indexPath)
-    readDeltaSnapshot(spark, indexPath, eager = true) match {
-      case Some(delta) =>
-        DiskannIndex.searchWithDelta(spark, indexPath, queries, delta, k,
-          searchListSize, rescore, tombs, metrics, nProbe)
-      case None =>
-        DiskannIndex.search(spark, indexPath, queries, k, searchListSize,
-          rescore, tombs, metrics, nProbe)
-    }
+    val (tombs, delta) = freshState(spark, indexPath, tombstones)
+    DiskannIndex.hitsDf(spark, DiskannIndex.searchCollected(spark, indexPath,
+      DiskannIndex.collectQueries(queries),
+      DiskannIndex.TopK(k, searchListSize, rescore, nProbe), tombs, metrics,
+      delta, driverWarm = true))
   }
 
   /**
    * Freshness-aware twin of [[DiskannIndex.searchPoint]]: sees
    * delta-appended rows and masks tombstoned ones, like [[searchFresh]].
-   * With no delta pending (the steady state between appends and right
-   * after a compact) it degrades to the warm driver-side fast path plus
-   * two FS listings (delta probe + tombstone registry); with a delta it
-   * pays the [[searchFresh]] DataFrame path — the delta must be scored,
-   * which is a job regardless. The pair (searchPoint for raw speed,
+   * Warm shards and the delta snapshot are both answered driver-side, so a
+   * warm index serves read-your-writes with no Spark job once the delta
+   * snapshot is taken. The pair (searchPoint for raw speed,
    * searchPointFresh for read-your-writes) mirrors the reference's scan
    * visibility semantics (scan.rs:229-235) at the point-query API.
    */
@@ -340,81 +328,49 @@ object StreamingIngest {
       qvec: Array[Float], k: Int, searchListSize: Int = 100,
       rescore: Int = 50, nProbe: Int = 0, qlabels: Array[Short] = null,
       tombstones: Set[Long] = Set.empty): Seq[(Long, Double)] = {
-    val tombs = tombstones ++ DiskannIndex.loadTombstones(spark, indexPath)
-    if (!hasDelta(spark, indexPath))
-      DiskannIndex.searchPoint(spark, indexPath, qvec, k, searchListSize,
-        rescore, nProbe, qlabels, tombs)
-    else {
-      import spark.implicits._
-      val base = Seq((0L, qvec)).toDF("qid", "qvec")
-      val q = if (qlabels == null) base
-        else base.withColumn("qlabels",
-          lit(graft.index.LabelSets.normalize(qlabels)).cast(
-            org.apache.spark.sql.types.ArrayType(
-              org.apache.spark.sql.types.ShortType)))
-      searchFresh(spark, indexPath, q, k, searchListSize, rescore, tombs,
-          None, nProbe)
-        .collect()
-        .map(r => (r.getLong(1), r.getDouble(2)))
-        .sortBy { case (rid, d) => (d, rid) }.toSeq
-    }
+    val (tombs, delta) = freshState(spark, indexPath, tombstones)
+    DiskannIndex.searchCollected(spark, indexPath,
+      Seq(DiskannIndex.query(0L, qvec, qlabels)),
+      DiskannIndex.TopK(k, searchListSize, rescore, nProbe), tombs, None,
+      delta, driverWarm = true).map(h => (h._2, h._3))
   }
 
   /**
    * Freshness-aware twin of [[DiskannIndex.rangeSearchWithStatus]] — the
    * radius scan that SEES pending micro-batch appends: the graph side runs
    * the normal escalate-until-stable range traversal, the delta side is an
-   * exact radius pass over ONLY the (small) un-compacted delta files
-   * ([[DiskannIndex.rangeOverDelta]] — the searchWithDelta discipline
-   * applied to the radius shape), and the union collapses by row_id. This
-   * closes the last scan shape where a pending delta forced an O(corpus)
-   * fallback: the reference's index serves inserted rows on EVERY scan
+   * exact radius pass over the delta snapshot, and the union collapses by
+   * row_id. The reference's index serves inserted rows on EVERY scan
    * (build.rs:464-535), so a streaming table's radius queries must too.
-   *
-   * Race-with-compact invariant (same as [[searchFresh]]): the delta is
-   * snapshotted — eagerly, lineage-truncated — BEFORE the graph search
-   * resolves its generation, so a compact landing in between can only
-   * surface a row on both sides (collapsed below), never on neither.
    *
    * Returns (hits, confirmed): `confirmed = false` means either the graph
    * traversal could not prove exhaustiveness (its own maxResults contract)
    * or the merged result overflowed `maxResults` — in both cases the
    * result may be incomplete and exactness-needing callers
    * ([[graft.plans.KnnRangeScanExec]]) must fall back to the exact scan.
-   * When unconfirmed BECAUSE the delta-side collect truncated, the
-   * returned prefix is an ARBITRARY subset of the delta's in-radius rows
-   * (Spark `limit` order, not nearest-first) — unconfirmed hits are a
-   * fallback trigger, not a best-effort answer; do not rank or serve them.
    */
   def rangeSearchFresh(spark: SparkSession, indexPath: String,
       qvec: Array[Float], radius: Double, searchListSize: Int = 100,
       rescore: Int = 50, qlabels: Array[Short] = null,
       tombstones: Set[Long] = Set.empty,
       maxResults: Int = 65536): (Seq[(Long, Double)], Boolean) = {
-    val tombs = tombstones ++ DiskannIndex.loadTombstones(spark, indexPath)
-    val deltaSnap = readDeltaSnapshot(spark, indexPath, eager = true)
+    val (tombs, delta) = freshState(spark, indexPath, tombstones)
     val (mainHits, confirmed) = DiskannIndex.rangeSearchWithStatus(spark,
       indexPath, qvec, radius, searchListSize, rescore, qlabels, tombs,
       nProbe = 0, maxResults = maxResults)
-    deltaSnap match {
-      case None => (mainHits, confirmed)
-      case _ if !confirmed => (mainHits, false)
-      case Some(delta) =>
-        val deltaHits = DiskannIndex.rangeOverDelta(spark, indexPath, delta,
-          qvec, radius, qlabels, tombs, maxResults)
-        // a row can transiently exist in BOTH main and delta (compaction
-        // folded it, file delete not yet visible) — collapse by row_id.
-        // deltaHits arriving ABOVE maxResults means its capped collect
-        // truncated (rows past the cap never reached the driver), so the
-        // merge below may be missing rows even if collapsing shrinks it
-        // under the cap — unconfirmed, like any other cap-forced exit
-        val merged = (mainHits ++ deltaHits)
-          .groupBy(_._1).iterator
-          .map { case (rid, ds) => (rid, ds.iterator.map(_._2).min) }
-          .toSeq.sortBy { case (rid, d) => (d, rid) }
-        if (merged.length > maxResults || deltaHits.size > maxResults)
-          (merged.take(maxResults), false)
-        else (merged, true)
+    if (delta.isEmpty || !confirmed) (mainHits, confirmed)
+    else {
+      val deltaHits = DiskannIndex.scoreDelta(
+        DiskannIndex.view(spark, indexPath).report, delta,
+        DiskannIndex.query(0L, qvec, qlabels),
+        DiskannIndex.Within(radius, searchListSize, rescore, maxResults,
+          strict = false), tombs)
+      val merged = DiskannIndex.mergeLocal(
+          mainHits.map { case (rid, d) => (0L, rid, d) } ++ deltaHits,
+          Int.MaxValue)
+        .map(h => (h._2, h._3))
+      if (merged.length > maxResults) (merged.take(maxResults), false)
+      else (merged, true)
     }
   }
 
@@ -483,126 +439,49 @@ object StreamingIngest {
       }
       .start()
 
-  /** Distributed twin of [[searchFresh]] for offline batch query tables:
-    * main-index results come from the shard-aligned zip path, the delta is
-    * broadcast and scored map-side ([[DiskannIndex.searchDistributedFresh]])
-    * — an offline job no longer needs a `compact()` first to see appends. */
   /**
    * Freshness-aware twin of [[DiskannIndex.servePointBatch]] — read-your-
    * writes for the EXECUTOR-resident serving pool, i.e. the cluster-mode
    * serving node's fresh path ([[searchPointFresh]]'s driver-warm fast path
    * does not exist there). The pool answers from the compacted
-   * generations; pending delta rows are brute-force scored against the
-   * batch in one pass over the delta files (bounded by the compaction
-   * contract) and merged driver-side under the same (dist, row_id) rule,
-   * so results are identical to a post-compaction pool query. The durable
-   * tombstone registry folds in automatically, like every fresh path.
+   * generations; the delta snapshot is scored driver-side and merged under
+   * the same (dist, row_id) rule, so results equal [[searchPointFresh]]'s.
    */
   def servePointBatchFresh(spark: SparkSession, indexPath: String,
       queries: Seq[(Long, Array[Float], Array[Short])], k: Int,
       searchListSize: Int = 100, rescore: Int = 50, nProbe: Int = 0,
       tombstones: Set[Long] = Set.empty): Seq[(Long, Long, Double)] = {
-    val tombs = tombstones ++ DiskannIndex.loadTombstones(spark, indexPath)
-    val pool = DiskannIndex.servePointBatch(spark, indexPath, queries, k,
-      searchListSize, rescore, nProbe, tombs)
-    readDeltaSnapshot(spark, indexPath, eager = false) match {
-      case None => pool
-      case Some(delta) =>
-        val meta = DiskannIndex.loadMeta(spark, indexPath)
-        val report = DiskannIndex.reportDistFn(
-          graft.index.Metric(meta.metric))
-        val hasDLabels = delta.columns.contains("labels")
-        val qArr = queries.map { case (qid, qv, ql) =>
-          (qid, qv, Option(ql).map(graft.index.LabelSets.normalize).orNull)
-        }.toArray
-        val qBc = spark.sparkContext.broadcast(qArr)
-        val tombBc = spark.sparkContext.broadcast(tombs)
-        // distributed brute force with a PER-PARTITION bounded top-k per
-        // query: the collect is ≤ partitions × |batch| × k rows no matter
-        // how large the pending delta grows — never the delta itself
-        val deltaHits = delta.select(col("row_id"), col("vec"),
-            (if (hasDLabels) col("labels")
-             else lit(null).cast(org.apache.spark.sql.types.ArrayType(
-               org.apache.spark.sql.types.ShortType))).as("labels"))
-          .rdd.mapPartitions { it =>
-            val best = new java.util.HashMap[
-              Long, scala.collection.mutable.ArrayBuffer[(Long, Double)]]()
-            it.foreach { r =>
-              val rid = r.getAs[Long]("row_id")
-              if (!tombBc.value.contains(rid)) {
-                val v = r.getAs[scala.collection.mutable.Seq[Float]]("vec")
-                  .toArray
-                val lbs =
-                  Option(r.getAs[scala.collection.mutable.Seq[Short]]("labels"))
-                    .map(s => graft.index.LabelSets.normalize(s.toArray))
-                    .orNull
-                qBc.value.foreach { case (qid, qv0, ql) =>
-                  val qv =
-                    if (qv0 == null) new Array[Float](v.length) else qv0
-                  val ok = ql == null ||
-                    (lbs != null && graft.index.LabelSets.overlaps(lbs, ql))
-                  if (ok) {
-                    val d = report(v, qv)
-                    val buf = best.computeIfAbsent(qid,
-                      _ => scala.collection.mutable.ArrayBuffer.empty)
-                    buf += ((rid, d))
-                    if (buf.length > 4 * k) {
-                      val kept = buf.sortBy { case (i, dd) => (dd, i) }.take(k)
-                      buf.clear(); buf ++= kept
-                    }
-                  }
-                }
-              }
-            }
-            val out = scala.collection.mutable.ArrayBuffer[(Long, Long, Double)]()
-            best.forEach { (qid, buf) =>
-              buf.sortBy { case (i, dd) => (dd, i) }.take(k)
-                .foreach { case (rid, d) => out += ((qid, rid, d)) }
-            }
-            out.iterator
-          }.collect()
-        (pool ++ deltaHits).groupBy(_._1).iterator.flatMap { case (_, hits) =>
-          hits.sortBy(h => (h._3, h._2)).take(k)
-        }.toSeq.sortBy(h => (h._1, h._3, h._2))
-    }
+    val (tombs, delta) = freshState(spark, indexPath, tombstones)
+    DiskannIndex.searchCollected(spark, indexPath,
+      queries.map { case (qid, qv, ql) => DiskannIndex.query(qid, qv, ql) },
+      DiskannIndex.TopK(k, searchListSize, rescore, nProbe), tombs, None,
+      delta, driverWarm = false)
   }
 
+  /** Distributed twin of [[searchFresh]] for offline batch query tables:
+    * main-index results come from the shard-aligned zip path, the delta
+    * snapshot is broadcast and scored map-side — an offline job no longer
+    * needs a `compact()` first to see appends. */
   def searchFreshDistributed(spark: SparkSession, indexPath: String,
       queries: DataFrame, k: Int, searchListSize: Int = 100,
       rescore: Int = 50, tombstones: Set[Long] = Set.empty,
       nProbe: Int = 0): DataFrame = {
-    val tombs = tombstones ++ DiskannIndex.loadTombstones(spark, indexPath)
-    // same race-with-compact invariant as [[searchFresh]]; here the
-    // snapshot is the eager driver collect inside searchDistributedFresh,
-    // which happens before ITS main search resolves the generation
-    readDeltaSnapshot(spark, indexPath, eager = false) match {
-      case Some(delta) =>
-        DiskannIndex.searchDistributedFresh(spark, indexPath, queries, delta,
-          k, searchListSize, rescore, tombs, nProbe)
-      case None =>
-        DiskannIndex.searchDistributed(spark, indexPath, queries, k,
-          searchListSize, rescore, tombs, nProbe)
-    }
+    val (tombs, delta) = freshState(spark, indexPath, tombstones)
+    DiskannIndex.searchTable(spark, indexPath, queries,
+      DiskannIndex.TopK(k, searchListSize, rescore, nProbe), tombs, delta)
   }
 
   /** One-call BATCH radius with freshness — the radius twin of
-    * [[searchFreshDistributed]]: snapshots the index's own pending delta
-    * and routes through [[DiskannIndex.rangeSearchDistributedFresh]]'s
-    * broadcast-delta merge; with no delta pending it is exactly
+    * [[searchFreshDistributed]]; with no delta pending it is exactly
     * [[DiskannIndex.rangeSearchDistributed]]. */
   def rangeSearchFreshDistributed(spark: SparkSession, indexPath: String,
       queries: DataFrame, radius: Double, searchListSize: Int = 100,
       rescore: Int = 50, tombstones: Set[Long] = Set.empty,
       maxResults: Int = 65536, strict: Boolean = true): DataFrame = {
-    val tombs = tombstones ++ DiskannIndex.loadTombstones(spark, indexPath)
-    readDeltaSnapshot(spark, indexPath, eager = false) match {
-      case Some(delta) =>
-        DiskannIndex.rangeSearchDistributedFresh(spark, indexPath, queries,
-          delta, radius, searchListSize, rescore, tombs, maxResults, strict)
-      case None =>
-        DiskannIndex.rangeSearchDistributed(spark, indexPath, queries,
-          radius, searchListSize, rescore, tombs, maxResults, strict)
-    }
+    val (tombs, delta) = freshState(spark, indexPath, tombstones)
+    DiskannIndex.searchTable(spark, indexPath, queries,
+      DiskannIndex.Within(radius, searchListSize, rescore, maxResults, strict),
+      tombs, delta)
   }
 
   /**
@@ -624,7 +503,7 @@ object StreamingIngest {
     // list-then-read race the fresh-search paths defend) re-lists and sees
     // the post-compact (smaller or empty) delta — the check then correctly
     // comes back not-due
-    val deltaSnap = readDeltaSnapshot(spark, indexPath, eager = false)
+    val deltaSnap = readDeltaSnapshot(spark, indexPath)
     val deltaRows = deltaSnap match {
       case None => return false
       case Some(df) => df.count()

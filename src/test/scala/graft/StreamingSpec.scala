@@ -1176,7 +1176,7 @@ class StreamingSpec extends AnyFunSuite {
       StreamingIngest.compact(spark, path)
     }
     // an in-flight reader: plan bound to the CURRENT generation's files
-    // (exactly what searchRows does at resolve time), not yet executed
+    // (exactly what a cold search does at resolve time), not yet executed
     val gen0 = DiskannIndex.resolveRoot(spark, path)
     val meta0 = DiskannIndex.loadMeta(spark, gen0)
     val inFlight = spark.read.parquet(s"$gen0/nodes")

@@ -43,6 +43,16 @@ object TopKAggregatorPropSpec extends Properties("TopKAggregator") {
       agg.finish(agg.merge(a, b)) == agg.finish(agg.merge(b, a))
     }
 
+  property("distinctIds: any split + merge == top-k of the (id -> min dist) collapse") =
+    forAll(hits, Gen.chooseNum(1, 8), Gen.chooseNum(0, 100)) { (xs, k, cut0) =>
+      val agg = new TopKAggregator(k, distinctIds = true)
+      val want = naive(xs.groupMapReduce(_._1)(_._2)(math.min).toList, k)
+      val cut = if (xs.isEmpty) 0 else cut0 % (xs.length + 1)
+      val (l, r) = xs.splitAt(cut)
+      agg.finish(reduceAll(agg, xs)) == want &&
+        agg.finish(agg.merge(reduceAll(agg, l), reduceAll(agg, r))) == want
+    }
+
   property("merge with zero is identity") =
     forAll(hits, Gen.chooseNum(1, 8)) { (xs, k) =>
       val agg = new TopKAggregator(k)

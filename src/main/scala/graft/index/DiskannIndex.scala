@@ -7,6 +7,7 @@ import org.apache.spark.sql.types._
 import scala.collection.mutable
 import graft.functions.{Sbq, VectorKernels}
 import graft.functions.Sbq.SbqModel
+import graft.FingerprintMemo
 
 /** Build/search parameters (defaults = reference defaults, BASELINE.md). */
 case class DiskannParams(
@@ -188,10 +189,7 @@ object DiskannIndex {
       // version numbering restarts; cached per-root state (tier manifests,
       // label counts) keyed on recreated root strings must not survive
       TierManifest.invalidateUnder(path)
-      labelCountsCache.synchronized {
-        val it = labelCountsCache.keySet().iterator()
-        while (it.hasNext) if (it.next().startsWith(path)) it.remove()
-      }
+      labelCountsMemo.invalidate(path)
     }
 
     // cosine: the graph/quantizer operate on normalized vectors
@@ -325,9 +323,6 @@ object DiskannIndex {
         .toDF().coalesce(1).write.mode("overwrite").parquet(s"$path/_meta")
     }
     GraphSearcher.invalidate(path)
-    // a full rebuild at the same path changes numRows arbitrarily — the
-    // planner's cost-gate cache must re-read it (compact/drop already do)
-    graft.plans.KnnCost.invalidate(path)
   }
 
   /** Per-shard Vamana graph build over a (row_id, vec, labels, shard)
@@ -501,49 +496,16 @@ object DiskannIndex {
       case rel => s"${indexRootOf(root)}/$rel"
     }
 
-  /**
-   * Session-local memo of the resolved per-generation nodes scan, keyed on
-   * the nodes directory's mtime (the [[ParquetMetaCache]] discipline): a
-   * generation's `nodes/` is WRITE-ONCE (appends land under `delta/`,
-   * deletes under `tombstones/`, compaction installs a NEW root), yet every
-   * `spark.read.parquet` builds a fresh file index — at production shard
-   * counts that is a full parallel leaf-file LISTING of every shard
-   * directory on EVERY serving query (measured: a 485 ms 317-path listing
-   * job per execution on the 500-shard fixture — the single largest cost
-   * of the warm many-shards serve). Reusing the resolved DataFrame reuses
-   * its InMemoryFileIndex, so warm serves skip the listing entirely; an
-   * in-place rebuild recreates the directory and bumps its mtime, which
-   * invalidates naturally. Metadata memoization only — no rows are cached.
-   */
-  // round-16 hardening (ADVICE): (a) the validity token is the generation's
-  // BUILD ID, not the nodes dir's mtime — a UUID minted per (re)build, so a
-  // same-second in-place rebuild invalidates exactly, and object stores
-  // whose directory mtimes are 0 / don't track children (S3A) can never
-  // alias two generations; (b) the session key is applicationId (unique per
-  // context — identityHashCode can be reused after a GC'd session and would
-  // serve a DataFrame bound to a dead context); (c) bounded access-order
-  // LRU — compaction installs a new root per swap, so an unbounded map
-  // retains one resolved file index per DEAD generation for the JVM's life.
-  private val nodesDfCache = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[String, (String, DataFrame)](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, (String, DataFrame)]): Boolean =
-        size() > 64
-    })
+  // the resolved per-generation nodes scan: reusing it reuses its file
+  // index, so warm serves skip a full leaf-file listing per query (485 ms on
+  // the 500-shard fixture). Fingerprint: the generation's buildId, minted
+  // per (re)build — a same-second in-place rebuild still invalidates.
+  private val nodesDfs =
+    new FingerprintMemo[DataFrame]("DiskannIndex.nodesDfs", 64, FingerprintMemo.Session)
   private def nodesBaseDf(spark: SparkSession, base: String,
-      genFp: String): DataFrame = {
-    val dirStr = s"$base/nodes"
-    // a DataFrame is bound to its context: key per applicationId so a fresh
-    // session (tests stop/start many) never serves a stale plan
-    val key = s"${spark.sparkContext.applicationId}#$dirStr"
-    val hit = nodesDfCache.get(key)
-    if (hit != null && hit._1 == genFp) hit._2
-    else {
-      val df = spark.read.schema(nodeSchema).parquet(dirStr)
-      nodesDfCache.put(key, (genFp, df))
-      df
-    }
-  }
+      genFp: String): DataFrame =
+    nodesDfs.get(spark, s"$base/nodes", genFp)(
+      spark.read.schema(nodeSchema).parquet(s"$base/nodes"))
 
   /**
    * Manifest-aware nodes scan: the rows of exactly `shards`, with the
@@ -1127,19 +1089,11 @@ object DiskannIndex {
     catch { case _: java.io.FileNotFoundException => Array.empty }
   }
 
-  /** Fingerprint-keyed cache for [[loadTombstones]]: the LISTING runs on
-    * every call (that is the freshness contract — a new delete must be
-    * visible to the next scan), but the parquet read + collect job is paid
-    * only when the listed (path, length, modtime) fingerprint changed.
-    * Steady serving between deletes: one metadata listing per query, zero
-    * Spark jobs. */
-  private val tombstoneCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, Set[Long])]()
-
-  private def tombstoneFingerprint(
-      files: Array[org.apache.hadoop.fs.FileStatus]): String =
-    files.map(s => s"${s.getPath}#${s.getLen}#${s.getModificationTime}")
-      .sorted.mkString("|")
+  // fingerprint: the registry's listing, taken on EVERY call (a new delete
+  // must be visible to the next scan); the read + collect job is paid only
+  // when it changed
+  private val tombstoneMemo =
+    new FingerprintMemo[Set[Long]]("DiskannIndex.tombstones", 64, FingerprintMemo.Jvm)
 
   /** Load the persisted tombstone set. Bounded by the compaction contract
     * (folded + consumed at every compact), so the driver-side Set is the
@@ -1152,17 +1106,13 @@ object DiskannIndex {
     while (attempt < 4) {
       attempt += 1
       val files = tombstoneFiles(spark, indexPath)
-      if (files.isEmpty) { tombstoneCache.remove(indexPath); return Set.empty }
-      val fp = tombstoneFingerprint(files)
-      val cached = tombstoneCache.get(indexPath)
-      if (cached != null && cached._1 == fp) return cached._2
-      try {
-        val set = spark.read.option("ignoreMissingFiles", "true")
+      if (files.isEmpty) return Set.empty
+      try return tombstoneMemo.get(spark, indexPath,
+          FingerprintMemo.fingerprintOf(files)) {
+        spark.read.option("ignoreMissingFiles", "true")
           .parquet(files.map(_.getPath.toString).toIndexedSeq: _*)
           .select(col("row_id").cast(LongType))
           .collect().map(_.getLong(0)).toSet
-        tombstoneCache.put(indexPath, (fp, set))
-        return set
       } catch {
         // plan-time path-not-exist from the race; re-list
         case e: org.apache.spark.sql.AnalysisException => lastErr = e
@@ -1179,75 +1129,41 @@ object DiskannIndex {
     * carry-forwards included): callers must treat the stats as an OPTIONAL
     * optimization input, never a correctness dependency. Cached per
     * generation root — the table is immutable once installed. */
-  // (fingerprint, counts) per root — fingerprint-validated like metaCache:
-  // an in-place rebuild in ANOTHER process can recreate the same root
-  // string with different data, and the consumer uses these counts as a
-  // hard exhaustion bound (stale-small counts would truncate results)
-  private val labelCountsCache = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[String, (String, Option[Map[Short, Long]])](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, (String, Option[Map[Short, Long]])]): Boolean =
-        size() > 64
-    })
+  // fingerprint: the labelstats dir's listing — an in-place rebuild in
+  // ANOTHER process can recreate the root string, and stale-small counts
+  // would truncate results (they are a hard exhaustion bound)
+  private val labelCountsMemo = new FingerprintMemo[Option[Map[Short, Long]]](
+    "DiskannIndex.labelCounts", 64, FingerprintMemo.Jvm)
 
   def labelCounts(spark: SparkSession,
       path0: String): Option[Map[Short, Long]] = {
     val root = resolveRoot(spark, path0)
     val p = new org.apache.hadoop.fs.Path(s"$root/labelstats")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val fp =
-      try fs.listStatus(p)
-        .map(s => s"${s.getPath.getName}:${s.getLen}:${s.getModificationTime}")
-        .sorted.mkString("|")
-      catch { case _: java.io.FileNotFoundException => "absent" }
-    val hit = labelCountsCache.get(root)
-    if (hit != null && hit._1 == fp) return hit._2
-    val out =
-      if (fp == "absent") None
+    val fp = FingerprintMemo.listingFingerprint(
+      p.getFileSystem(spark.sessionState.newHadoopConf()), p)
+    labelCountsMemo.get(spark, root, fp) {
+      if (fp == FingerprintMemo.Absent) None
       else Some(spark.read.parquet(p.toString)
         .collect().map(r => r.getShort(0) -> r.getLong(1)).toMap)
-    labelCountsCache.put(root, (fp, out))
-    out
+    }
   }
+
+  // fingerprint: the `_meta` dir's listing — a generation's meta is
+  // immutable, but the flat root's can be rewritten in place. Unmemoized,
+  // this read dominated warm single-query serving (~100 of ~140 ms).
+  private val metaMemo =
+    new FingerprintMemo[IndexMeta]("DiskannIndex.meta", 64, FingerprintMemo.Jvm)
 
   /** [[loadMeta]] for an ALREADY-RESOLVED generation root — the GC needs the
     * flat root's own meta even when a newer generation is active (plain
-    * loadMeta would re-resolve right past it). */
-  /** Per-JVM meta cache keyed by the `_meta` directory's listing
-    * fingerprint (names + sizes + mtimes): a generation's meta is
-    * immutable under the versioned-install protocol, but the FLAT root's
-    * `_meta` can be rewritten by the legacy in-place upgrade, so the
-    * fingerprint — one cheap LIST, no Spark job — is the invalidation
-    * rule (the tombstone registry's discipline). Without it every search
-    * call pays a full parquet-read job for a KB of metadata, which
-    * DOMINATES warm single-query serving latency (~100 ms of the ~140 ms
-    * measured before this cache). */
-  /** Bounded LRU: compaction creates a NEW generation dir per swap, so an
-    * unbounded path-keyed map would retain one IndexMeta (incl. IVF
-    * centroids) per dead generation for the life of the JVM. 64 live
-    * (index, generation) pairs is far above any serving set. */
-  private val metaCache = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[String, (String, IndexMeta)](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, (String, IndexMeta)]): Boolean =
-        size() > 64
-    })
-
-  private def metaFingerprint(spark: SparkSession, path: String): String = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/_meta")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    fs.listStatus(p).map(s =>
-        s"${s.getPath.getName}:${s.getLen}:${s.getModificationTime}")
-      .sorted.mkString("|")
-  }
-
+    * loadMeta would re-resolve right past it). A missing `_meta` skips the
+    * memo and throws what the fresh read throws. */
   private[graft] def loadMetaAt(spark: SparkSession, path: String): IndexMeta = {
-    val fp = metaFingerprint(spark, path)
-    val hit = metaCache.get(path)
-    if (hit != null && hit._1 == fp) return hit._2
-    val meta = readMetaAt(spark, path)
-    metaCache.put(path, (fp, meta))
-    meta
+    val p = new org.apache.hadoop.fs.Path(s"$path/_meta")
+    val fp = FingerprintMemo.listingFingerprint(
+      p.getFileSystem(spark.sessionState.newHadoopConf()), p)
+    if (fp == FingerprintMemo.Absent) readMetaAt(spark, path)
+    else metaMemo.get(spark, path, fp)(readMetaAt(spark, path))
   }
 
   private def readMetaAt(spark: SparkSession, path: String): IndexMeta = {
@@ -1613,17 +1529,10 @@ object DiskannIndex {
       else None
     }
 
-  /** Memo for [[shardRdd]]: index STATE, never query results (every
-    * execution still scans the parquet nodes). Fingerprint = generation
-    * root + per-shard build ids + Spark application id, so a compaction,
-    * an in-place rebuild or a session restart invalidates naturally.
-    * Bounded LRU like [[metaCache]]. */
-  private val shardRddCache = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[String, (String, RDD[Row])](8, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, (String, RDD[Row])]): Boolean =
-        size() > 16
-    })
+  // fingerprint: the generation root + per-shard build ids (a compaction
+  // or an in-place rebuild changes them)
+  private val shardRdds =
+    new FingerprintMemo[RDD[Row]]("DiskannIndex.shardRdds", 16, FingerprintMemo.Session)
 
   /**
    * Stage 5b: the shard-aligned nodes RDD over `shards` — partition i holds
@@ -1642,11 +1551,8 @@ object DiskannIndex {
       math.max(1, math.ceil(shards.length.toDouble / zipMaxShards).toInt)
     val buckets = shards.grouped(bucketSize).toIndexedSeq
     val key = s"${v.path0}#${shards.mkString(",")}#$bucketSize"
-    val fp = v.root + "#" + v.meta.shardBuildIds.mkString(",") + "#" +
-      spark.sparkContext.applicationId
-    val hit = shardRddCache.get(key)
-    if (hit != null && hit._1 == fp) (hit._2, buckets)
-    else {
+    val fp = v.root + "#" + v.meta.shardBuildIds.mkString(",")
+    val rdd = shardRdds.get(spark, key, fp) {
       val rdd = bucketedNodesRdd(spark, nodesDf(spark, v.root, v.meta, shards),
         buckets)
       // alignment rests on coalesce(1) yielding exactly ONE partition even
@@ -1657,9 +1563,9 @@ object DiskannIndex {
         s"nodes RDD has ${rdd.getNumPartitions} partitions, expected " +
           s"${buckets.length} (one per shard bucket; empty-shard coalesce(1) " +
           "must still yield one partition)")
-      shardRddCache.put(key, (fp, rdd))
-      (rdd, buckets)
+      rdd
     }
+    (rdd, buckets)
   }
 
   /**
@@ -1733,6 +1639,10 @@ object DiskannIndex {
       case (q, r) if r.forall(_.contains(shard)) => q
     }.toSeq
 
+  /** The most delta rows a session's fresh paths snapshot. */
+  private[graft] def deltaCap(spark: SparkSession): Int =
+    spark.conf.get("graft.delta.maxBroadcastRows", "2000000").toInt
+
   /** Stage 6a: the capped delta snapshot every fresh path scores. At most
     * `graft.delta.maxBroadcastRows` rows reach the driver — enforced, not
     * advisory: one extra row proves oversize, and the error names the real
@@ -1742,7 +1652,7 @@ object DiskannIndex {
     * (without that, both copies could take two top-k slots). */
   private[graft] def deltaSnapshot(spark: SparkSession,
       delta: DataFrame): Array[DeltaRow] = {
-    val cap = spark.conf.get("graft.delta.maxBroadcastRows", "2000000").toInt
+    val cap = deltaCap(spark)
     val rows = delta.select(col("row_id").cast(LongType), col("vec"),
         (if (delta.columns.contains("labels")) col("labels")
          else lit(null).cast(ArrayType(ShortType))).as("labels"))

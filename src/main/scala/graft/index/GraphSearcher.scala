@@ -3,6 +3,7 @@ package graft.index
 import scala.collection.mutable
 import graft.functions.Sbq.SbqModel
 import graft.functions.VectorKernels
+import graft.FingerprintMemo
 
 /**
  * Immutable per-shard serving kernel (SURVEY.md §2.6, §3.2): resumable
@@ -241,54 +242,31 @@ final class SearchStats extends Serializable {
 }
 
 object GraphSearcher {
-  /** Per-executor cache: shard graphs are immutable, so one decode per JVM
-    * serves every query in the executor's lifetime (the Spark analog of the
-    * reference keeping index pages in shared buffers). Keys are
-    * `path#shard#buildId` — the buildId is a fresh UUID per (re)build written
-    * into `_meta`, so after a rebuild every executor naturally misses without
-    * any cross-JVM invalidation. [[invalidate]] is only an eager-eviction
-    * hygiene hook for the local/same-JVM case. */
-  /** Max cached shard graphs per JVM (`spark.graft.maxCachedShards`); at
-    * cluster scale an executor may be asked to serve more shards than fit
-    * its heap, so eviction is LRU — the analog of the reference sizing its
-    * build caches by maintenance_work_mem (neighbor_store.rs:78-97). */
+  /** Per-executor cache of decoded shard graphs, the analog of the
+    * reference keeping index pages in shared buffers. Keys are
+    * `path#shard#buildId` — the buildId is minted per (re)build, so a
+    * rebuild misses on every executor with no cross-JVM invalidation, and
+    * the fingerprint is constant. LRU past `spark.graft.maxCachedShards`
+    * (an executor may serve more shards than fit its heap). */
   private def maxEntries: Int =
     try {
       val env = org.apache.spark.SparkEnv.get
       if (env == null) 256 else env.conf.getInt("spark.graft.maxCachedShards", 256)
     } catch { case _: Throwable => 256 }
+  private val cache = new FingerprintMemo[GraphSearcher]("GraphSearcher.shards",
+    maxEntries, FingerprintMemo.Jvm)
 
-  private val cache = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[String, GraphSearcher](64, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, GraphSearcher]): Boolean =
-        size() > maxEntries
-    })
-
-  def getOrBuild(key: String, mk: () => GraphSearcher): GraphSearcher = {
-    val hit = cache.get(key)
-    if (hit != null) hit
-    else {
-      // build OUTSIDE the map lock so concurrent tasks decode different
-      // shards in parallel; a rare duplicate build of the same immutable
-      // shard is benign (first put wins)
-      val built = mk()
-      val prev = cache.putIfAbsent(key, built)
-      if (prev != null) prev else built
-    }
-  }
+  def getOrBuild(key: String, mk: () => GraphSearcher): GraphSearcher =
+    cache.get(key, "")(mk())
 
   /** Current number of cached shard graphs in this JVM (ops/test hook). */
-  def cachedCount: Int = cache.size()
+  def cachedCount: Int = cache.size
 
   /** Cache lookup without building — the serving warm path asks this on the
     * query-issuing JVM to skip the nodes scan for already-decoded shards. */
-  def peek(key: String): Option[GraphSearcher] = Option(cache.get(key))
+  def peek(key: String): Option[GraphSearcher] = cache.peek(key)
 
   /** Best-effort same-JVM eviction of stale builds (frees memory promptly in
     * local mode); correctness across executors comes from buildId keying. */
-  def invalidate(prefix: String): Unit = cache.synchronized {
-    val it = cache.keySet().iterator()
-    while (it.hasNext) if (it.next().startsWith(prefix)) it.remove()
-  }
+  def invalidate(prefix: String): Unit = cache.invalidate(prefix)
 }

@@ -1,55 +1,24 @@
 package graft.index
 
 import org.apache.spark.sql.{Row, SparkSession}
+import graft.FingerprintMemo
 
 /**
- * JVM-local memo for the tiny single-row build-constant tables the stored
- * artifacts carry (`idxmeta`: bucket counts, shingle/band geometry,
- * positions flag). Every index SERVING call resolves these constants, and
- * `spark.read.parquet(...).head()` is a full Spark job (file listing +
- * schema inference + a one-task collect) — pure fixed overhead repeated on
- * every probe of an artifact whose constants, by contract, only change on
- * a rebuild.
- *
- * Entries are validated against the directory's CHILD LISTING fingerprint
- * (file names + sizes + mtimes — the DiskannIndex.metaCache discipline), so
- * a rebuild (files renamed into the dir by the committer, then `_SUCCESS`)
- * naturally invalidates — no writer coordination, correct across processes,
- * and correct on stores whose DIRECTORY mtimes are unreliable (S3A reports
- * 0 / marker mtimes; a same-second rebuild aliases a bare dir mtime). One
- * cheap LIST per call, no Spark job. Bounded access-order LRU: compaction
- * installs a new generation dir per swap, so an unbounded path-keyed map
- * would retain one row per dead generation for the JVM's life. This is
- * METADATA memoization (build constants), the same class as the
- * tier-manifest cache and the query layer's corpus-size memo: query
- * results are never cached here.
+ * The single-row build-constant tables the stored artifacts carry
+ * (`idxmeta`: bucket counts, shingle/band geometry, positions flag), read on
+ * every serving call — unmemoized, each read is a whole Spark job.
  */
 object ParquetMetaCache {
-  private val cache = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[String, (String, Row)](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, (String, Row)]): Boolean =
-        size() > 64
-    })
+  // fingerprint: the dir's listing (a rebuild renames new files in)
+  private val rows = new FingerprintMemo[Row]("ParquetMetaCache.rows", 64, FingerprintMemo.Jvm)
 
-  /** `spark.read.parquet(dir).head()`, memoized on `dir`'s child listing.
-    * Throws `FileNotFoundException` when the dir is missing (callers that
-    * treat a missing meta as "no index yet" already catch exactly that). */
+  /** `spark.read.parquet(dir).head()`, memoized on `dir`'s listing. A
+    * missing dir skips the memo and throws what the fresh read throws. */
   def headRow(spark: SparkSession, dir: String): Row = {
     val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val fp = fs.listStatus(p).map(s =>
-        s"${s.getPath.getName}:${s.getLen}:${s.getModificationTime}")
-      .sorted.mkString("|")
-    val e = cache.get(dir)
-    if (e != null && e._1 == fp) e._2
-    else {
-      val row = spark.read.parquet(dir).head()
-      cache.put(dir, (fp, row))
-      row
-    }
+    val fp = FingerprintMemo.listingFingerprint(
+      p.getFileSystem(spark.sessionState.newHadoopConf()), p)
+    if (fp == FingerprintMemo.Absent) spark.read.parquet(dir).head()
+    else rows.get(spark, dir, fp)(spark.read.parquet(dir).head())
   }
-
-  /** Test hook / explicit invalidation. */
-  def invalidate(dir: String): Unit = cache.remove(dir)
 }

@@ -1,6 +1,7 @@
 package graft.index
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.FingerprintMemo
 
 /**
  * Tier manifest shared by the batched stored artifacts (text index, dedup
@@ -26,42 +27,14 @@ object TierManifest {
   private[graft] def indexPathOfRoot(root: String): String =
     DiskannIndex.indexRootOf(root)
 
-  // (fingerprint, base) per root — the metaCache discipline: a root STRING
-  // can be recreated with different content by an in-place rebuild in
-  // ANOTHER process (version numbering restarts after the versions/ scrub),
-  // so every hit revalidates against the tiermeta dir's listing fingerprint
-  // (names+sizes+mtimes; one cheap LIST, no Spark job).
-  private val tierBaseCache = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[String, (String, Option[String])](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, (String, Option[String])]): Boolean =
-        size() > 64
-    })
-
-  private def tiermetaFingerprint(fs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path): String =
-    try fs.listStatus(p)
-      .map(s => s"${s.getPath.getName}:${s.getLen}:${s.getModificationTime}")
-      .sorted.mkString("|")
-    catch { case _: java.io.FileNotFoundException => "absent" }
-
-  /** Resolved-table memo (round 16): every SERVING probe re-resolved its
-    * generation tables (`bands`/`signatures` for the dedup index,
-    * `postings`/`termstats` for the text index) through a fresh
-    * `spark.read.parquet` — a full directory listing plus a one-task
-    * schema-inference Spark job of pure fixed overhead per call (measured:
-    * ~40 ms job + ~100 ms driver gap per table per probe). The resolved
-    * DataFrame is memoized per (applicationId, root, table) and every hit
-    * revalidates against the table dirs' listing fingerprints (an append
-    * lands a new `batch=N` dir or new files — either changes the listing),
-    * so appends/compactions invalidate naturally. Metadata/resolution
-    * memoization only — rows are read from parquet on every execution. */
-  private val tableDfCache = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[String, (String, DataFrame)](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, (String, DataFrame)]): Boolean =
-        size() > 64
-    })
+  // fingerprint: the tiermeta dir's listing — an in-place rebuild in
+  // ANOTHER process can recreate a root string with different content
+  private val tierBases = new FingerprintMemo[Option[String]](
+    "TierManifest.tierBases", 64, FingerprintMemo.Jvm)
+  // fingerprint: the table dir's two-level listing (an append lands a new
+  // batch=N dir, or files in an existing batch/tb dir) + the base path
+  private val tableDfs = new FingerprintMemo[DataFrame](
+    "TierManifest.tableDfs", 64, FingerprintMemo.Session)
 
   /** Drop every cached entry under `path` — REQUIRED after an in-place
     * rebuild: `build*Index` deletes `versions/`, version numbering restarts
@@ -70,35 +43,24 @@ object TierManifest {
     * the base corpus from every union read; a stale Some could point GC at
     * the wrong retained set. */
   def invalidateUnder(path: String): Unit = {
-    tierBaseCache.synchronized {
-      val it = tierBaseCache.keySet().iterator()
-      while (it.hasNext) if (it.next().startsWith(path)) it.remove()
-    }
-    tableDfCache.synchronized {
-      val it = tableDfCache.keySet().iterator()
-      // keys are "appId#root#table" — match the root segment
-      while (it.hasNext) if (it.next().contains(s"#$path")) it.remove()
-    }
+    tierBases.invalidate(path)
+    tableDfs.invalidate(path)
   }
 
   /** The self-contained base generation a TIER generation references;
-    * None for self-contained generations. Cached per root (immutable once
-    * installed). */
+    * None for self-contained generations. */
   def tierBase(spark: SparkSession, root: String): Option[String] = {
     val p = new org.apache.hadoop.fs.Path(s"$root/tiermeta")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val fp = tiermetaFingerprint(fs, p)
-    val hit = tierBaseCache.get(root)
-    if (hit != null && hit._1 == fp) return hit._2
-    val out =
-      if (fp == "absent") None
+    val fp = FingerprintMemo.listingFingerprint(
+      p.getFileSystem(spark.sessionState.newHadoopConf()), p)
+    tierBases.get(spark, root, fp) {
+      if (fp == FingerprintMemo.Absent) None
       else {
         val rel = spark.read.parquet(p.toString).head().getString(0)
         val idx = indexPathOfRoot(root)
         Some(if (rel.isEmpty) idx else s"$idx/$rel")
       }
-    tierBaseCache.put(root, (fp, out))
-    out
+    }
   }
 
   /** One logical table of the generation at `root`: the local dir, plus —
@@ -110,32 +72,9 @@ object TierManifest {
   def tableDfAt(spark: SparkSession, root: String,
       table: String): DataFrame = {
     val base = tierBase(spark, root)
-    val conf = spark.sessionState.newHadoopConf()
-    // TWO-LEVEL directory listing (names + sizes + mtimes of the table
-    // dir's children AND grandchildren): these tables are partitioned up
-    // to two levels deep (batch=N/tb=M/part-*), and a file landing at any
-    // depth either appears in the listing or bumps its listed parent
-    // dir's mtime — so an idempotent replay appending files into an
-    // EXISTING batch/tb dir still invalidates. O(#batch + #tb) stats, not
-    // O(#files): a first cut that recursively listed every posting file
-    // (fs.listFiles(p, true)) cost more per probe than the re-resolution
-    // it saved — measured +0.2-0.5 s on the whole bm25/dedup serving
-    // family — because LocatedFileStatus stats every part file.
-    def fpOf(dir: String): String = {
-      val p = new org.apache.hadoop.fs.Path(dir)
-      val fs = p.getFileSystem(conf)
-      def line(s: org.apache.hadoop.fs.FileStatus): String =
-        s"${s.getPath.toUri.getPath}:${s.getLen}:${s.getModificationTime}"
-      try {
-        val l1 = fs.listStatus(p)
-        val l2 = l1.filter(_.isDirectory)
-          .flatMap(d => fs.listStatus(d.getPath).map(line))
-        (l1.map(line) ++ l2).sorted.mkString("|")
-      } catch { case _: java.io.FileNotFoundException => "absent" }
-    }
-    // a missing local dir must keep the fresh-read error shape — skip the
-    // memo entirely and let spark.read.parquet throw what it always threw
-    val localFp = fpOf(s"$root/$table")
+    val local = new org.apache.hadoop.fs.Path(s"$root/$table")
+    val localFp = FingerprintMemo.listingFingerprint(
+      local.getFileSystem(spark.sessionState.newHadoopConf()), local, depth = 2)
     def resolve(): DataFrame = base match {
       case Some(b) =>
         spark.read.option("basePath", s"$b/$table")
@@ -143,20 +82,11 @@ object TierManifest {
           .unionByName(spark.read.parquet(s"$root/$table"))
       case None => spark.read.parquet(s"$root/$table")
     }
-    if (localFp == "absent") return resolve()
-    // the referenced base generation's batch=0 is IMMUTABLE once installed
-    // (the tier-fold contract; tierBase itself revalidates via the
-    // tiermeta listing), so the base contributes its PATH, not a per-call
-    // walk of the whole corpus tier's files
-    val fp = localFp + "||" + base.getOrElse("-")
-    val key = s"${spark.sparkContext.applicationId}#$root#$table"
-    val hit = tableDfCache.get(key)
-    if (hit != null && hit._1 == fp) hit._2
-    else {
-      val df = resolve()
-      tableDfCache.put(key, (fp, df))
-      df
-    }
+    // a missing local dir keeps the fresh-read error shape
+    if (localFp == FingerprintMemo.Absent) resolve()
+    // the base's batch=0 is IMMUTABLE once installed: its path suffices
+    else tableDfs.get(spark, s"$root#$table",
+      localFp + "||" + base.getOrElse("-"))(resolve())
   }
 
   /** Write the 1-row base reference into a generation under construction

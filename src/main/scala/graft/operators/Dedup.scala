@@ -80,9 +80,8 @@ object Dedup {
       .transform(graft.CacheScope.persist)
 
   /** LSH band table: one (id, band, bucket) row per band, bucket = hash of
-    * that band's signature slice. private[graft]: MinhashPhases times these
-    * stages individually, against THIS code, not a copy. */
-  private[graft] def bandTable(base: DataFrame, numHashes: Int, bands: Int): DataFrame = {
+    * that band's signature slice. */
+  private def bandTable(base: DataFrame, numHashes: Int, bands: Int): DataFrame = {
     val r = numHashes / bands
     base.select(col("id"),
       posexplode(transform(sequence(lit(0), lit(bands - 1)),
@@ -171,7 +170,7 @@ object Dedup {
   /** LSH candidate (id_a < id_b) pairs from a signature table: banding,
     * optional bucket-width skew cap, banded self-join, distinct — the ONE
     * candidate generator every LSH-verified pair operator shares. */
-  private[graft] def lshCandidatePairs(base: DataFrame, numHashes: Int, bands: Int,
+  private def lshCandidatePairs(base: DataFrame, numHashes: Int, bands: Int,
       maxBucketSize: Long): DataFrame = {
     val banded = cappedBands(bandTable(base, numHashes, bands), maxBucketSize)
     banded.as("a")
@@ -183,7 +182,7 @@ object Dedup {
   }
 
   /** The bucket-width skew cap of [[lshCandidatePairs]], as its own stage. */
-  private[graft] def cappedBands(banded: DataFrame, maxBucketSize: Long): DataFrame =
+  private def cappedBands(banded: DataFrame, maxBucketSize: Long): DataFrame =
     if (maxBucketSize <= 0) banded
     else banded.withColumn("__n", count(lit(1)).over(
         org.apache.spark.sql.expressions.Window.partitionBy(col("band"), col("bucket"))))
@@ -630,7 +629,7 @@ object Dedup {
       batch: DataFrame, idCol: String, textCol: String,
       threshold: Double = 0.8, excludeBatch: Long = -1L): DataFrame = {
     TextAnalysis.register(spark)
-    // mtime-memoized: the probe path pays this on every call
+    // listing-memoized: the probe path pays this on every call
     val m = graft.index.ParquetMetaCache.headRow(spark, s"$path/idxmeta")
     val (shingleSize, numHashes, nBands) = (m.getAs[Int]("shingle_size"),
       m.getAs[Int]("num_hashes"), m.getAs[Int]("bands"))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
 import graft.index.{DiskannIndex, WriterLock}
+import graft.FingerprintMemo
 
 /**
  * A STORED inverted text index — the text-retrieval twin of the ANN index's
@@ -133,50 +134,29 @@ object TextIndex {
 
   case class TextIndexMeta(nBuckets: Int, positions: Boolean)
 
-  /** Corpus totals (N docs, Σdl) of the CURRENT generation, memoized on the
-    * generation root + the corpusstats directory's mtime: every serving
-    * call needs these two longs, and recomputing them was a per-query
-    * broadcast-exchange materialization (scan + agg + collect) of values
-    * that only change when a batch lands (append/compact both write into
-    * `corpusstats/` or install a new root, bumping the key). Same
-    * metadata-memo class as [[graft.index.ParquetMetaCache]] — DELETEs
-    * deliberately do NOT invalidate, because pre-vacuum scoring keeps
-    * counting tombstoned docs (the documented staleness window).
-    * [[textIndexStats]] does not use this memo: it is the integrity audit
-    * and must recompute from the stores. */
-  // round-16: validated against the corpusstats CHILD LISTING (batch dirs'
-  // names + mtimes — an append lands a new batch=N dir or files into one,
-  // changing the listing), not the bare dir mtime, which aliases on
-  // same-second appends and is unreliable on object stores; bounded LRU so
-  // dead generations don't accumulate (the metaCache discipline).
-  private val corpusTotalsCache = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[String, (String, (Long, Long))](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, (String, (Long, Long))]): Boolean =
-        size() > 64
-    })
+  /** Corpus totals (N docs, Σdl) of the CURRENT generation — every
+    * serving call needs them, and recomputing them was a per-query
+    * broadcast-exchange materialization. DELETEs deliberately do NOT
+    * invalidate: pre-vacuum scoring keeps counting tombstoned docs (the
+    * documented staleness window). [[textIndexStats]] does not use this
+    * memo: it is the integrity audit and must recompute from the stores. */
+  // fingerprint: the corpusstats listing (an append lands a new batch=N dir
+  // or files into one; a compact installs a new root)
+  private val corpusTotalsMemo = new FingerprintMemo[(Long, Long)](
+    "TextIndex.corpusTotals", 64, FingerprintMemo.Jvm)
   private def corpusTotals(spark: SparkSession, root: String): (Long, Long) = {
     val dir = new org.apache.hadoop.fs.Path(s"$root/corpusstats")
     val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    val fp = fs.listStatus(dir).map(s =>
-        s"${s.getPath.getName}:${s.getLen}:${s.getModificationTime}")
-      .sorted.mkString("|")
-    val cached = corpusTotalsCache.get(root)
-    if (cached != null && cached._1 == fp) cached._2
-    else {
+    corpusTotalsMemo.get(spark, root, FingerprintMemo.fingerprintOf(fs.listStatus(dir))) {
       val r = tableDfAt(spark, root, "corpusstats")
         .agg(sum(col("n")).as("n"), sum(col("sumdl")).as("sumdl")).head()
       // an empty-corpus build writes n=0 with a NULL sum — fold to 0
-      val v = (if (r.isNullAt(0)) 0L else r.getLong(0),
+      (if (r.isNullAt(0)) 0L else r.getLong(0),
         if (r.isNullAt(1)) 0L else r.getLong(1))
-      corpusTotalsCache.put(root, (fp, v))
-      v
     }
   }
 
   def readMeta(spark: SparkSession, path: String): TextIndexMeta = {
-    // mtime-memoized: build constants are read on EVERY serving call, and
-    // the unmemoized head() is a whole Spark job of fixed overhead
     val r = graft.index.ParquetMetaCache.headRow(spark, s"$path/idxmeta")
     TextIndexMeta(r.getAs[Int]("n_buckets"), r.getAs[Boolean]("positions"))
   }
@@ -198,7 +178,6 @@ object TextIndex {
         // plan-time missing path only; everything else is a real failure
         case e: org.apache.spark.sql.AnalysisException
             if e.getCondition == "PATH_NOT_FOUND" => None
-        case _: java.io.FileNotFoundException => None
       }
     (passed, recorded) match {
       case (0, Some(m)) => m

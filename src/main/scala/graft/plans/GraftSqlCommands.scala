@@ -547,7 +547,7 @@ case class DescribeDiskannIndexCommand(target: Either[String, String])
  * registration; without re-registration a compaction swap would leave the
  * view serving the superseded graph until GC breaks it outright. Compact
  * calls [[EdgeViews.refresh]] right after the swap (next to its
- * KnnCost/GraphSearcher invalidations), so any view registered in this
+ * GraphSearcher invalidation), so any view registered in this
  * JVM re-binds to the active generation. A compaction run by a DIFFERENT
  * JVM can't reach this session's views — there the view is a consistent
  * snapshot under the GC grace window until the next same-JVM compact or

@@ -124,7 +124,6 @@ object Graft {
         p.getFileSystem(conf).delete(p, true)
       }
       graft.index.GraphSearcher.invalidate(e.indexPath)
-      KnnCost.invalidate(e.indexPath)
     }
   }
 }
@@ -141,24 +140,6 @@ class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Un
     TextIndexTvf.injectInto(ext)
     WarcTvf.injectInto(ext)
   }
-}
-
-/**
- * Planner-side row-count cache for the cost gate: one tiny meta read per
- * index per JVM (re-read after [[GraphSearcher.invalidate]]-style churn is
- * unnecessary — the gate only needs the order of magnitude, and compaction
- * changes numRows by the delta size, not the magnitude).
- */
-object KnnCost {
-  private val rows = TrieMap.empty[String, Long]
-
-  def indexedRows(spark: SparkSession, indexPath: String): Option[Long] =
-    try Some(rows.getOrElseUpdate(indexPath,
-      DiskannIndex.loadMeta(spark, indexPath).numRows))
-    catch { case _: Throwable => None }
-
-  def invalidate(indexPath: String): Unit = rows.remove(indexPath)
-  def clear(): Unit = rows.clear()
 }
 
 class KnnStrategy(spark: SparkSession) extends SparkStrategy {
@@ -378,7 +359,8 @@ class KnnStrategy(spark: SparkSession) extends SparkStrategy {
       // row count, graph traversal + k point-fetches can't beat the native
       // scan + TakeOrdered (which reads every row ONCE, distributed), so
       // fall through to it. Unknown row count (unreadable meta) => no gate.
-      if KnnCost.indexedRows(spark, entry.indexPath).forall { n =>
+      if scala.util.Try(DiskannIndex.loadMeta(spark, entry.indexPath).numRows)
+          .toOption.forall { n =>
         val frac = spark.conf.get("graft.knn.maxKFraction", "0.1").toDouble
         k < math.max(1L, (n * frac).toLong)
       }

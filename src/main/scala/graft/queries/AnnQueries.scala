@@ -49,11 +49,14 @@ object AnnQueries {
     * rows at the sf0.1 spot-check (2000). Serving keeps the reference GUC
     * defaults (real clustered embeddings run at L=100, VamanaSpec); this
     * scaling is a property of the exact-match VERIFICATION fixture, capped
-    * so the bench stays bounded. Memoized: one count per sf dir per JVM. */
+    * so the bench stays bounded. */
+  // fingerprint: the embeddings listing (a regenerated sf dir recounts)
   private val corpusSizes =
-    new java.util.concurrent.ConcurrentHashMap[String, Long]()
+    new graft.FingerprintMemo[Long]("AnnQueries.corpusSizes", 16, graft.FingerprintMemo.Jvm)
   private def oracleL(spark: SparkSession, dir: String): Int = {
-    val n = corpusSizes.computeIfAbsent(dir, d => emb(spark, d).count())
+    val p = new org.apache.hadoop.fs.Path(s"$dir/embeddings.parquet")
+    val n = corpusSizes.get(spark, dir, graft.FingerprintMemo.listingFingerprint(
+      p.getFileSystem(spark.sessionState.newHadoopConf()), p))(emb(spark, dir).count())
     math.min(2048L, math.max(200L, n / 2)).toInt
   }
 

@@ -45,12 +45,8 @@ object PipelineQueries {
     * fresh path instead of silently serving the stale index). */
   private def textIndexPath(spark: SparkSession, dir: String): String = {
     val src = new org.apache.hadoop.fs.Path(s"$dir/documents.parquet")
-    val fs = src.getFileSystem(spark.sessionState.newHadoopConf())
-    val listing =
-      try fs.listStatus(src)
-        .map(s => s"${s.getPath.getName}#${s.getLen}#${s.getModificationTime}")
-        .sorted.mkString("|")
-      catch { case _: java.io.FileNotFoundException => "missing" }
+    val listing = graft.FingerprintMemo.listingFingerprint(
+      src.getFileSystem(spark.sessionState.newHadoopConf()), src, sep = "#")
     val fp = java.security.MessageDigest.getInstance("MD5")
       .digest(listing.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
     // "textidx2": build params are part of the cache key (round 7 added

@@ -53,12 +53,8 @@ object VectorQueries {
     * the stale index (the failure mode the events table hit this round). */
   private def postingsPath(spark: SparkSession, dir: String): String = {
     val src = new org.apache.hadoop.fs.Path(s"$dir/embeddings.parquet")
-    val fs = src.getFileSystem(spark.sessionState.newHadoopConf())
-    val listing =
-      try fs.listStatus(src)
-        .map(s => s"${s.getPath.getName}#${s.getLen}#${s.getModificationTime}")
-        .sorted.mkString("|")
-      catch { case _: java.io.FileNotFoundException => "missing" }
+    val listing = graft.FingerprintMemo.listingFingerprint(
+      src.getFileSystem(spark.sessionState.newHadoopConf()), src, sep = "#")
     val fp = java.security.MessageDigest.getInstance("MD5")
       .digest(listing.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
     s"/tmp/graft_index/${dir.replaceAll("[^A-Za-z0-9.]", "_")}/postings15_$fp"

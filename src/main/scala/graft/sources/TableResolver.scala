@@ -1,55 +1,25 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.FingerprintMemo
 
 /**
- * Memoized parquet-table RESOLUTION for the query layer's base tables.
- *
- * Every query closure opens its input tables with `spark.read.parquet(dir)`,
- * and each such call re-resolves the source from scratch: a directory
- * listing (fresh `InMemoryFileIndex`), a one-task schema-inference Spark
- * job (parquet footer read), and DataSource plan construction — measured at
- * ~40 ms of job plus ~60-100 ms of serial driver work PER TABLE PER
- * EXECUTION. Over a 200-query suite whose every query opens 1-3 tables,
- * that is seconds of pure fixed overhead re-deriving metadata that cannot
- * have changed — and at production scale the relisting is O(files) driver
- * RPCs per query, the exact cost manifest-based table formats exist to
- * remove (optimization guide §6).
- *
- * The resolved DataFrame is memoized per (applicationId, directory) and
- * every hit revalidates against the directory's child-listing fingerprint
- * (file names + sizes + mtimes — one cheap LIST, no Spark job), so a
- * regenerated fixture invalidates naturally. This is METADATA memoization
- * (schema + file index), the exact class of the index layer's
- * nodesBaseDf/metaCache memos: no rows are cached, and every execution of
- * the returned DataFrame scans parquet in full.
+ * Memoized parquet-table RESOLUTION for the query layer's base tables: a
+ * fresh `spark.read.parquet(dir)` re-lists the directory and runs a
+ * schema-inference job (~40 ms job + ~60-100 ms driver work per table per
+ * execution). Metadata only — every execution still scans parquet in full.
  */
 object TableResolver {
-  private val cache = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[String, (String, DataFrame)](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, (String, DataFrame)]): Boolean =
-        size() > 64
-    })
+  // fingerprint: the directory's listing (a regenerated fixture changes it)
+  private val tables =
+    new FingerprintMemo[DataFrame]("TableResolver.tables", 64, FingerprintMemo.Session)
 
   def parquet(spark: SparkSession, dir: String): DataFrame = {
     val p = new org.apache.hadoop.fs.Path(dir)
-    val fp = try {
-      val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-      fs.listStatus(p).map(s =>
-          s"${s.getPath.getName}:${s.getLen}:${s.getModificationTime}")
-        .sorted.mkString("|")
-    } catch { case _: java.io.FileNotFoundException => "absent" }
-    // missing path: fall through to the fresh read so the error shape is
-    // exactly what an unmemoized read.parquet has always thrown
-    if (fp == "absent") return spark.read.parquet(dir)
-    val key = s"${spark.sparkContext.applicationId}#$dir"
-    val hit = cache.get(key)
-    if (hit != null && hit._1 == fp) hit._2
-    else {
-      val df = spark.read.parquet(dir)
-      cache.put(key, (fp, df))
-      df
-    }
+    val fp = FingerprintMemo.listingFingerprint(
+      p.getFileSystem(spark.sessionState.newHadoopConf()), p)
+    // missing path: the fresh read keeps its error shape
+    if (fp == FingerprintMemo.Absent) spark.read.parquet(dir)
+    else tables.get(spark, dir, fp)(spark.read.parquet(dir))
   }
 }

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.index.{DiskannIndex, DiskannParams}
+import graft.FingerprintMemo
 
 /**
  * Structured-Streaming ingestion for the vector engine (SURVEY.md §3.3 /
@@ -174,26 +175,18 @@ object StreamingIngest {
    * race) surface the last error instead of being silently treated as
    * empty.
    */
-  // per-JVM memo of each snapshot kind, keyed by the session's
-  // applicationId + index path + kind, validated by the delta listing's
-  // fingerprint (names + sizes + mtimes — delta files are write-once,
-  // renamed in): every fresh-serving query was re-reading an UNCHANGED
-  // delta. An append or compact changes the listing, so the fingerprint
-  // invalidates naturally; a hit requires the CURRENT listing to match, so
-  // the race-with-compact window is identical to a fresh list-then-read.
-  // Index STATE memoization (the GraphSearcher-cache class) — never query
-  // results. applicationId, not identityHashCode (reusable after a GC'd
-  // session), and bounded — an unbounded map pins one snapshot per dead
-  // (session, index) pair on the driver for the JVM's life.
-  private val deltaSnapshotCache = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[String, (String, AnyRef)](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, (String, AnyRef)]): Boolean =
-        size() > 16
-    })
+  // fingerprint: the delta listing (delta files are write-once, renamed
+  // in); a hit needs the CURRENT listing to match, so the race-with-compact
+  // window is that of a fresh list-then-read
+  private val deltaDfs =
+    new FingerprintMemo[DataFrame]("StreamingIngest.deltaDfs", 16, FingerprintMemo.Session)
+  // ... plus the snapshot cap, which bounds what a session may collect
+  private val deltaRowsMemo = new FingerprintMemo[Array[DiskannIndex.DeltaRow]](
+    "StreamingIngest.deltaRows", 16, FingerprintMemo.Jvm)
 
-  private def snapshotDelta[T <: AnyRef](spark: SparkSession,
-      indexPath: String, kind: String)(load: DataFrame => T): Option[T] = {
+  private def snapshotDelta[T](spark: SparkSession, indexPath: String,
+      memo: FingerprintMemo[T], fpSuffix: String = "")(
+      load: DataFrame => T): Option[T] = {
     val maxAttempts = 4
     var lastErr: Throwable = null
     var attempt = 0
@@ -201,18 +194,11 @@ object StreamingIngest {
       attempt += 1
       val sts = deltaFileStatuses(spark, indexPath)
       if (sts.isEmpty) return None
-      val key = s"${spark.sparkContext.applicationId}#$indexPath#$kind"
-      val fp = sts.map(s =>
-          s"${s.getPath.getName}:${s.getLen}:${s.getModificationTime}")
-        .sorted.mkString("|")
-      val hit = deltaSnapshotCache.get(key)
-      if (hit != null && hit._1 == fp) return Some(hit._2.asInstanceOf[T])
-      try {
-        val snap = load(spark.read.option("ignoreMissingFiles", "true")
+      try return Some(memo.get(spark, indexPath,
+          FingerprintMemo.fingerprintOf(sts) + fpSuffix) {
+        load(spark.read.option("ignoreMissingFiles", "true")
           .parquet(sts.map(_.getPath.toString).toIndexedSeq: _*))
-        deltaSnapshotCache.put(key, (fp, snap))
-        return Some(snap)
-      } catch {
+      }) catch {
         // plan-time path-not-exist from the list-then-read race; re-list
         case e: org.apache.spark.sql.AnalysisException => lastErr = e
       }
@@ -221,9 +207,9 @@ object StreamingIngest {
   }
 
   /** The resolved (not yet read) delta: maybeCompact's row counts. */
-  private def readDeltaSnapshot(spark: SparkSession,
+  private[graft] def readDeltaSnapshot(spark: SparkSession,
       indexPath: String): Option[DataFrame] =
-    snapshotDelta(spark, indexPath, "df")(identity)
+    snapshotDelta(spark, indexPath, deltaDfs)(identity)
 
   /** The delta rows every fresh search scores — the capped driver snapshot
     * of [[DiskannIndex.deltaSnapshot]] (NULL vectors dropped, replays
@@ -232,7 +218,8 @@ object StreamingIngest {
     * deleting the delta files afterwards cannot lose its rows. */
   private[graft] def deltaRows(spark: SparkSession,
       indexPath: String): Array[DiskannIndex.DeltaRow] =
-    snapshotDelta(spark, indexPath, "rows")(DiskannIndex.deltaSnapshot(spark, _))
+    snapshotDelta(spark, indexPath, deltaRowsMemo,
+        s"#${DiskannIndex.deltaCap(spark)}")(DiskannIndex.deltaSnapshot(spark, _))
       .getOrElse(Array.empty)
 
   /** True iff un-compacted micro-batch appends are pending — the signal the
@@ -249,39 +236,26 @@ object StreamingIngest {
     * the GENERATION row count the same caller reads (the compact moved
     * them into main); appends landing after the count are invisible to
     * this query's snapshot anyway. */
-  // per-JVM count cache keyed by the delta listing's fingerprint (names +
-  // sizes + mtimes — delta files are write-once, renamed in): a streaming
-  // index accumulating hundreds of micro-batch files between compactions
-  // would otherwise pay hundreds of sequential footer opens on EVERY query
-  // execution; warm it is one LIST, the same invalidation discipline as
-  // DiskannIndex.metaCache
-  private val deltaCountCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, Long)]()
+  // fingerprint: the delta listing — warm, hundreds of micro-batch files
+  // cost one LIST instead of hundreds of footer opens per execution
+  private val deltaCounts =
+    new FingerprintMemo[Long]("StreamingIngest.deltaCounts", 64, FingerprintMemo.Jvm)
 
   private[graft] def deltaRowCount(spark: SparkSession, indexPath: String): Long = {
     val sts = deltaFileStatuses(spark, indexPath)
-    val fp = sts.map(s =>
-        s"${s.getPath.getName}:${s.getLen}:${s.getModificationTime}")
-      .sorted.mkString("|")
-    val hit = deltaCountCache.get(indexPath)
-    if (hit != null && hit._1 == fp) return hit._2
     val conf = spark.sessionState.newHadoopConf()
-    var failed = false
-    val n = sts.map { s =>
-      try {
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile
-          .fromPath(s.getPath, conf)
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try r.getRecordCount finally r.close()
-      } catch { case _: java.io.IOException => failed = true; 0L }
-    }.sum
     // the count feeds an EXHAUSTION bound, so only over-counting is safe:
     // a transiently unreadable footer (store throttle, listing race that
     // isn't a consume) makes the whole count a pessimistic "unknown" — one
     // extra escalation round, never a silently-missing row — and is NEVER
-    // cached (the next call retries the read)
-    if (failed) Long.MaxValue / 4
-    else { deltaCountCache.put(indexPath, (fp, n)); n }
+    // cached (the load throws, so the next call retries the read)
+    try deltaCounts.get(spark, indexPath, FingerprintMemo.fingerprintOf(sts)) {
+      sts.map { s =>
+        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(s.getPath, conf))
+        try r.getRecordCount finally r.close()
+      }.sum
+    } catch { case _: java.io.IOException => Long.MaxValue / 4 }
   }
 
   /** The state every fresh read sees, taken BEFORE the search resolves its
@@ -776,8 +750,6 @@ object StreamingIngest {
         case None =>
           graft.index.GraphSearcher.invalidate(indexPath)
       }
-      // the planner's cost-gate row count changed with this generation
-      graft.plans.KnnCost.invalidate(indexPath)
       // registered edge views re-bind to the new generation (same-JVM
       // freshness; see EdgeViews' cross-JVM snapshot contract)
       graft.plans.EdgeViews.refresh(indexPath)

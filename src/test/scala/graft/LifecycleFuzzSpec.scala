@@ -17,7 +17,10 @@ import graft.streaming.StreamingIngest
  * their INTERACTIONS (e.g. split then delete-from-split-shard then fold,
  * delete of a row that only ever lived in the delta, compact landing on an
  * already-clean root), the class of bug a fixed scenario cannot enumerate.
- * Everything is seeded — a failure replays deterministically.
+ * Everything is seeded — a failure replays deterministically. The run also
+ * proves the serving memos were warm: the meta, tombstone and delta-rows
+ * memos must record hits, so the exact answers above came through
+ * fingerprint-validated cache entries, not only fresh reads.
  */
 class LifecycleFuzzSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -30,6 +33,11 @@ class LifecycleFuzzSpec extends AnyFunSuite {
       f.delete()
     }
     deleteRec(new java.io.File(path))
+    val warmMemos =
+      Seq("DiskannIndex.meta", "DiskannIndex.tombstones", "StreamingIngest.deltaRows")
+    def hits(): Map[String, Long] = warmMemos.map(m =>
+      m -> FingerprintMemo.stats.get(m).map(_.hits).getOrElse(0L)).toMap
+    val hitsBefore = hits()
 
     // seed overridable for local sweeps (env; forked test JVMs inherit it):
     //   GRAFT_FUZZ_SEED=7 sbt 'testOnly graft.LifecycleFuzzSpec'
@@ -130,5 +138,8 @@ class LifecycleFuzzSpec extends AnyFunSuite {
     // final state: one more compact (clean root), then both shapes exact
     StreamingIngest.compact(spark, path)
     verify(9999)
+    val hitsAfter = hits()
+    warmMemos.foreach(m => assert(hitsAfter(m) > hitsBefore(m),
+      s"$m recorded no hit: the sequence never ran against a warm memo"))
   }
 }
